@@ -116,8 +116,11 @@ def _choose_tid_seed(terms: DataFrame, max_attempts: int = 3) -> int:
 
 
 def _encode_group(pdf: pd.DataFrame, block_size: int, avgdl: float) -> pd.DataFrame:
-    """Encode one (term, salt) posting run into blocks. Input columns:
-    term, salt, doc_id, tf, dl."""
+    """Encode one (term, salt) posting run into blocks, one block and one
+    posting at a time — the byte-level reference the vectorized
+    ``_encode_arrow`` is tested against.  Input columns: term, salt,
+    doc_id, tf, dl, and optionally the per-posting lists positions,
+    start_offsets and end_offsets."""
     pdf = pdf.sort_values("doc_id")
     docs = pdf["doc_id"].to_numpy(np.int64)
     tfs = pdf["tf"].to_numpy(np.int64)
@@ -125,24 +128,36 @@ def _encode_group(pdf: pd.DataFrame, block_size: int, avgdl: float) -> pd.DataFr
     tfhat = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
     term = pdf["term"].iloc[0]
     salt = int(pdf["salt"].iloc[0])
+
+    def gaps(values) -> bytes:  # one posting's stream, first value absolute
+        return vb_encode(delta_encode(values).astype(np.uint64))
+
     rows = []
     for b, s in enumerate(range(0, len(docs), block_size)):
         e = min(s + block_size, len(docs))
         d = docs[s:e]
-        rows.append(
-            {
-                "term": term,
-                "salt": salt,
-                "block_id": b,
-                "n": e - s,
-                "first_doc": int(d[0]),
-                "last_doc": int(d[-1]),
-                "max_tfhat": float(tfhat[s:e].max()),
-                "docs_vb": vb_encode(delta_encode(d).astype(np.uint64)),
-                "tfs_vb": vb_encode(tfs[s:e].astype(np.uint64)),
-                "dls_vb": vb_encode(dls[s:e].astype(np.uint64)),
-            }
-        )
+        blk = pdf.iloc[s:e]
+        row = {
+            "term": term,
+            "salt": salt,
+            "block_id": b,
+            "n": e - s,
+            "first_doc": int(d[0]),
+            "last_doc": int(d[-1]),
+            "max_tfhat": float(tfhat[s:e].max()),
+            "docs_vb": vb_encode(delta_encode(d).astype(np.uint64)),
+            "tfs_vb": vb_encode(tfs[s:e].astype(np.uint64)),
+            "dls_vb": vb_encode(dls[s:e].astype(np.uint64)),
+        }
+        if "positions" in pdf.columns:
+            row["pos_vb"] = b"".join(gaps(p) for p in blk["positions"])
+        if "start_offsets" in pdf.columns:
+            row["off_vb"] = b"".join(gaps(o) for o in blk["start_offsets"])
+            row["len_vb"] = b"".join(
+                vb_encode((np.asarray(en, dtype=np.int64)
+                           - np.asarray(st, dtype=np.int64)).astype(np.uint64))
+                for st, en in zip(blk["start_offsets"], blk["end_offsets"]))
+        rows.append(row)
     return pd.DataFrame(rows)
 
 
@@ -338,13 +353,13 @@ def _binary_from_segments(buf: bytes, off: np.ndarray):
 
 def _encode_arrow(t, block_size: int, avgdl: float):
     """Encode all contiguous (tid, salt) groups of a sorted Arrow
-    table into one blocks RecordBatch — the vectorization strategy of
-    ``_encode_partition_groups`` (block boundaries by arithmetic on
-    group offsets, ``reduceat`` aggregates, ONE segmented-varbyte pass
-    per payload column) with Arrow-native I/O on top: the group key is
-    the fixed-width ``tid`` (no string materialization at all — group
-    detection is an int64 vector compare) and payload columns are
-    built zero-copy from the segmented buffers."""
+    table into one blocks RecordBatch, byte-identical to running
+    ``_encode_group`` per group (tested): block boundaries by arithmetic
+    on group offsets, ``reduceat`` aggregates and ONE segmented-varbyte
+    pass per payload column, instead of a per-group encoder loop.  The
+    group key is the fixed-width ``tid`` (no string materialization at
+    all — group detection is an int64 vector compare) and payload
+    columns are built zero-copy from the segmented buffers."""
     import pyarrow as pa
 
     from .codec import vb_encode_segmented
@@ -433,95 +448,6 @@ def _encode_arrow(t, block_size: int, avgdl: float):
             arrays.append(_binary_from_segments(len_buf, len_off))
             names.append("len_vb")
     return pa.RecordBatch.from_arrays(arrays, names)
-
-
-def _encode_partition_groups(
-    pdf: pd.DataFrame, block_size: int, avgdl: float
-) -> pd.DataFrame:
-    """Encode all contiguous (term, salt) groups of a sorted chunk —
-    fully vectorized: block boundaries by arithmetic on group offsets,
-    per-block aggregates via ``reduceat``, and ONE varbyte pass per
-    column with per-block byte offsets (`vb_encode_segmented`), instead
-    of a pandas groupby loop calling the encoder per posting list
-    (~620k Python iterations per 60k-doc corpus — the original
-    blocks-phase bottleneck)."""
-    from .codec import vb_encode_segmented
-
-    pdf = pdf.sort_values("doc_id", kind="stable")
-    # stable doc-sort then stable group-sort => (term, salt, doc_id) order
-    pdf = pdf.sort_values(["term", "salt"], kind="stable")
-    docs = pdf["doc_id"].to_numpy(np.int64)
-    tfs = pdf["tf"].to_numpy(np.int64)
-    dls = pdf["dl"].to_numpy(np.int64)
-    salts = pdf["salt"].to_numpy(np.int64)
-    tcodes = pd.factorize(pdf["term"], sort=False)[0]
-    n = len(docs)
-    if n == 0:
-        return pd.DataFrame(columns=[
-            "term", "salt", "block_id", "n", "first_doc", "last_doc",
-            "max_tfhat", "docs_vb", "tfs_vb", "dls_vb",
-        ] + (["pos_vb"] if "positions" in pdf.columns else []))
-
-    gchange = np.empty(n, dtype=bool)
-    gchange[0] = True
-    gchange[1:] = (tcodes[1:] != tcodes[:-1]) | (salts[1:] != salts[:-1])
-    gid = np.cumsum(gchange) - 1
-    gstart_idx = np.flatnonzero(gchange)
-    pos = np.arange(n, dtype=np.int64) - gstart_idx[gid]
-
-    bstart_mask = pos % block_size == 0
-    bstarts = np.flatnonzero(bstart_mask)
-    bends = np.concatenate((bstarts[1:], [n]))
-
-    tfhat = tfs / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = docs[0]
-    np.subtract(docs[1:], docs[:-1], out=deltas[1:])
-    deltas[bstarts] = docs[bstarts]  # first value of a block is absolute
-
-    docs_buf, docs_off = vb_encode_segmented(deltas.astype(np.uint64), bstarts)
-    tfs_buf, tfs_off = vb_encode_segmented(tfs.astype(np.uint64), bstarts)
-    dls_buf, dls_off = vb_encode_segmented(dls.astype(np.uint64), bstarts)
-
-    out = pd.DataFrame(
-        {
-            "term": pdf["term"].to_numpy()[bstarts],
-            "salt": salts[bstarts].astype(np.int32),
-            "block_id": (pos[bstarts] // block_size).astype(np.int32),
-            "n": (bends - bstarts).astype(np.int32),
-            "first_doc": docs[bstarts],
-            "last_doc": docs[bends - 1],
-            "max_tfhat": np.maximum.reduceat(tfhat, bstarts),
-            "docs_vb": [docs_buf[docs_off[i]: docs_off[i + 1]]
-                        for i in range(len(bstarts))],
-            "tfs_vb": [tfs_buf[tfs_off[i]: tfs_off[i + 1]]
-                       for i in range(len(bstarts))],
-            "dls_vb": [dls_buf[dls_off[i]: dls_off[i + 1]]
-                       for i in range(len(bstarts))],
-        }
-    )
-    if "positions" in pdf.columns:
-        # flat position stream in posting order; gap-encode with reset
-        # at each posting start (first position absolute), then ONE
-        # segmented varbyte pass with block-boundary offsets in the
-        # position stream (cum_tf at each block's first posting)
-        plists = [np.asarray(x, dtype=np.int64) for x in pdf["positions"]]
-        flat_pos = (np.concatenate(plists) if plists
-                    else np.empty(0, dtype=np.int64))
-        cum_tf = np.concatenate(([0], np.cumsum(tfs)))
-        pstarts = cum_tf[:-1]  # posting i's positions at cum_tf[i]:
-        pdeltas = np.empty(len(flat_pos), dtype=np.int64)
-        if len(flat_pos):
-            pdeltas[0] = flat_pos[0]
-            np.subtract(flat_pos[1:], flat_pos[:-1], out=pdeltas[1:])
-            nonempty = pstarts[pstarts < len(flat_pos)]
-            pdeltas[nonempty] = flat_pos[nonempty]
-        pos_buf, pos_off = vb_encode_segmented(
-            pdeltas.astype(np.uint64), cum_tf[bstarts]
-        )
-        out["pos_vb"] = [pos_buf[pos_off[i]: pos_off[i + 1]]
-                         for i in range(len(bstarts))]
-    return out
 
 
 N_TERM_BUCKETS = 16
@@ -666,7 +592,7 @@ def _block_hash_dec(payload_cols: list[str]):
     """Per-block content hash folded to decimal(38,0).  Bucket checksum
     = SUM of these — order-independent, so it is invariant to task
     scheduling; collision-negligible for integrity/resume-identity
-    purposes.  Shared by the one-shot (observe) and incremental
+    purposes.  Shared by the one-shot (observe) and per-bucket
     (grouped-agg) paths so a resumed build reports byte-identical
     checksums.
 
@@ -707,7 +633,7 @@ BLOCKS_WRITE_OPTIONS = {
 
 def _manifest_agg(blocks: DataFrame, group_col: str | None) -> DataFrame:
     """Distributed, order-independent logical checksum + size metrics
-    (incremental/resume path; the one-shot path computes the same
+    (per-bucket/resume path; the one-shot path computes the same
     aggregates in-pass via ``observe``)."""
     pc = _payload_cols(blocks.columns)
     enriched = blocks.withColumn("_h", _block_hash_dec(pc))
@@ -742,8 +668,6 @@ def build_physical_index(
     n_salts: int = 16,
     salt_threshold: int = 50_000,
     n_buckets: int = N_TERM_BUCKETS,
-    resume: bool = True,
-    incremental: bool = False,
     fail_after_bucket: int | None = None,
     logical: LogicalIndex | None = None,
     with_positions: bool = False,
@@ -757,10 +681,10 @@ def build_physical_index(
     - **one-shot** (default): a single partitionBy(tb) write of every
       bucket, then one grouped pass computing all bucket manifests —
       minimal job count, the throughput path.
-    - **incremental** (``incremental=True`` or a partially-built
-      ``out_path``): per-bucket encode+write+manifest loop; buckets with
-      an existing manifest are skipped, which is the resume path after a
-      mid-build failure.
+    - **per-bucket** (a partially-built ``out_path``, or
+      ``fail_after_bucket``): encode+write+manifest loop per bucket;
+      buckets with an existing manifest are skipped, which is the resume
+      path after a mid-build failure.
 
     ``fail_after_bucket`` injects a crash after N completed buckets
     (resume tests only)."""
@@ -773,9 +697,7 @@ def build_physical_index(
         int(f.split("_")[1].split(".")[0])
         for f in os.listdir(manifest_dir)
         if f.startswith("bucket_")
-    } if resume else set()
-    if existing:
-        incremental = True  # partial build present -> only fill the gaps
+    }
 
     idx = logical or build_logical_index(
         docs, text_col, analyzer, with_positions=with_positions,
@@ -823,7 +745,7 @@ def build_physical_index(
     # full-cache countDistinct pass was ~1.2 s of per-build serial
     # weight at 16 cores).  Caller-provided logicals (whose cache may
     # already be materialized — the observation would never fire) and
-    # fused-path indexes keep the explicit aggregation.
+    # indexes from the in-task plans keep the explicit aggregation.
     t_st = time.time()
     dc_obs = idx.pop_doc_count_observation() if logical is None else None
     if dc_obs is not None:
@@ -861,7 +783,7 @@ def build_physical_index(
     avgdl = stats["avgdl"] or 1.0
     doc_count = stats["doc_count"]
     term_dict = ts.select("term")
-    # seed chosen ONCE here: the incremental path calls encode_blocks
+    # seed chosen ONCE here: the per-bucket path calls encode_blocks
     # per bucket and would otherwise re-run the vocabulary injectivity
     # job n_buckets times
     tid_seed = _choose_tid_seed(term_dict)
@@ -873,7 +795,7 @@ def build_physical_index(
                   # distinct-shuffle over the postings exchange
                   term_dict=term_dict, tid_seed=tid_seed)
 
-    if not incremental and fail_after_bucket is None:
+    if not existing and fail_after_bucket is None:
 
         tb0 = time.time()
         blocks = encode_blocks(postings.drop("tb"), **enc_kw).withColumn(

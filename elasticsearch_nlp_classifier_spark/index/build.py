@@ -25,7 +25,6 @@ query/layout concern, handled by salting in `blocks.py`, not here.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -40,7 +39,7 @@ class LogicalIndex:
     term_stats: DataFrame    # (term, df, ttf)
     doc_lengths: DataFrame   # (doc_id, dl)
     _corpus_stats: dict | None = field(default=None, repr=False)
-    #: Observation riding the tokenize stage (explode plans only):
+    #: Observation riding the tokenize stage (explode plan only):
     #: metric ``dc`` = docs with ≥1 token == exact doc_count.  It fires
     #: with the FIRST action that executes the postings plan (e.g. the
     #: cache-materializing term_stats write in the physical build) —
@@ -57,7 +56,7 @@ class LogicalIndex:
     def corpus_stats(self) -> dict:
         """A4 row (doc_count, sum_ttf, sum_doc_freq, avgdl) — computed
         lazily from the postings relation: one per-doc partial agg
-        (postings are born doc-contiguous in the fused build, so the
+        (postings are born doc-contiguous in the in-task plans, so the
         map side collapses to ~doc_count rows before the shuffle) and
         a ms-scale agg over term_stats.  Never re-tokenizes the corpus
         (the previous doc_lengths pass re-ran the analyzer over every
@@ -180,91 +179,6 @@ def tokenize_postings(
     return docs.select(doc_id_col, text_col).mapInArrow(run, out_schema)
 
 
-def tokenize_occurrences(
-    docs: DataFrame,
-    text_col: str = "content",
-    analyzer: str = "code",
-    doc_id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, term, pos, start_offset, end_offset, dl) — one row per
-    token OCCURRENCE with its 0-based position and char span in the
-    original text (`Analyzer.tokenize_with_offsets`; the term-vector
-    ``offsets`` flag surface, `TermVectorQuery.java:60-76`).  A single
-    narrow ``mapInPandas`` pass.
-
-    For the regex-split chains the index build uses (``code``,
-    ``simple_code``) the whole batch is tokenized by ONE ``finditer``
-    over a joined superstring (`chain.batch_tokenize_with_offsets`) —
-    per-token Python work is two C-level comprehensions, so an offsets
-    build no longer pays a per-document Python analyzer call (the r3
-    verdict's input_hint violation).  Chains the batch path can't
-    express (twitter/tab split, stemming, token filters, pathological
-    non-length-preserving ``lower()``) fall back to the per-doc
-    ``tokenize_with_offsets`` twin — token/span parity between the two
-    paths is pinned in tests."""
-    import numpy as np
-    import pandas as pd
-
-    from ..analyzer.chain import batch_tokenize_with_offsets, get_analyzer
-
-    an = get_analyzer(analyzer)
-    schema = ("doc_id bigint, term string, pos int, start_offset int, "
-              "end_offset int, dl bigint")
-
-    def run(batches):
-        two = an.tokenize_with_offsets
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            fast = batch_tokenize_with_offsets(an, pdf[text_col].tolist())
-            if fast is not None:
-                doc_idx, terms, starts, ends, n_per_doc = fast
-                if not len(terms):
-                    continue
-                doc_ids = pdf[doc_id_col].to_numpy(np.int64)
-                # doc_idx ascends (matches stream in text order), so the
-                # first index of each doc's run gives per-doc positions
-                first_of = np.searchsorted(doc_idx, doc_idx, side="left")
-                pos = np.arange(len(doc_idx), dtype=np.int64) - first_of
-                yield pd.DataFrame({
-                    "doc_id": doc_ids[doc_idx],
-                    "term": np.asarray(terms, dtype=object),
-                    "pos": pos.astype(np.int32),
-                    "start_offset": starts.astype(np.int32),
-                    "end_offset": ends.astype(np.int32),
-                    "dl": n_per_doc[doc_idx],
-                })
-                continue
-            triples = [
-                two(s) if s is not None else []
-                for s in pdf[text_col]
-            ]
-            lens = np.array([len(t) for t in triples], dtype=np.int64)
-            if not lens.sum():
-                continue
-            doc_ids = pdf[doc_id_col].to_numpy(np.int64)
-            flat_t = [t for tr in triples for t, _, _ in tr]
-            flat_s = np.fromiter(
-                (s for tr in triples for _, s, _ in tr),
-                dtype=np.int64, count=int(lens.sum()))
-            flat_e = np.fromiter(
-                (e for tr in triples for _, _, e in tr),
-                dtype=np.int64, count=int(lens.sum()))
-            rows = np.repeat(np.arange(len(triples), dtype=np.int64), lens)
-            pos = np.arange(len(rows), dtype=np.int64) - np.repeat(
-                np.concatenate(([0], np.cumsum(lens)[:-1])), lens)
-            yield pd.DataFrame({
-                "doc_id": doc_ids[rows],
-                "term": np.asarray(flat_t, dtype=object),
-                "pos": pos.astype(np.int32),
-                "start_offset": flat_s.astype(np.int32),
-                "end_offset": flat_e.astype(np.int32),
-                "dl": lens[rows],
-            })
-
-    return docs.select(doc_id_col, text_col).mapInPandas(run, schema)
-
-
 def tokenize_occurrence_postings(
     docs: DataFrame,
     text_col: str = "content",
@@ -287,8 +201,7 @@ def tokenize_occurrence_postings(
     Arrow ``ListArray.from_arrays(offsets, flat_values)`` directly
     from the grouped numpy streams — measured 56× cheaper than
     materializing millions of per-posting ``np.split`` views through
-    a pandas object column.  Parity with the explode+groupBy
-    construction over `tokenize_occurrences` is pinned in tests."""
+    a pandas object column."""
     import numpy as np
     import pandas as pd
 
@@ -368,122 +281,54 @@ def build_logical_index(
     text_col: str = "content",
     analyzer: str = "code",
     doc_id_col: str = "doc_id",
-    fused: "bool | str | None" = None,
     with_positions: bool = False,
     with_offsets: bool = False,
 ) -> LogicalIndex:
-    """``fused=True`` (the default): JVM-expressible analyzers
-    (``code``, ``simple_code``) take the explode→groupBy plan —
-    tokenize + explode + partial hash agg inside whole-stage codegen,
-    with the (doc_id, term) exchange map-side combined — while
-    Python-chain analyzers fuse postings assembly into the tokenize
-    task (``tokenize_postings`` ``mapInArrow``) so occurrences never
-    cross an Arrow boundary unaggregated.  ``fused=False`` forces the
-    explode plan for everyone (plan-level cross-check; token parity
-    between the paths is pinned by tests).
+    """One postings plan per payload shape, chosen from the arguments:
 
-    ``fused="always"`` routes JVM analyzers through the fused plan too
-    — ZERO pre-encode exchange (the explode plan's postings shuffle is
-    ~44% of the build's total shuffle bytes, `BASELINE.md`).  Round 5
-    MEASURED a default flip to "always" and rejected it for the
-    single-box default: the fused 8→32 scaling median collapses to
-    0.626 vs explode's 0.834 and the 32-core absolute build is slower
-    (`BENCH/SCALING_FUSED_8x32.md`) — the Python-side postings phase
-    stops scaling once the shared memory bus saturates while the JVM
-    explode plan keeps scaling.  On a real cluster, where the removed
-    1.6 GB/240k-doc exchange crosses the NETWORK, deploy with
-    ``fused="always"`` / env ``SPARK_GRAFT_FUSED=always`` — the knob
-    the unset default resolves through.
+    - no payload, JVM-expressible analyzer (``code``, ``simple_code``):
+      tokenize + explode + partial hash agg inside whole-stage codegen,
+      the (doc_id, term) exchange map-side combined; a tokenize-stage
+      ``Observation`` yields the exact doc count for free;
+    - no payload, Python-chain analyzer: ``tokenize_postings`` — per-doc
+      tf assembled inside the tokenize task, so occurrences never cross
+      an Arrow boundary unaggregated;
+    - ``with_positions`` and/or ``with_offsets``:
+      ``tokenize_occurrence_postings`` — postings with nested
+      per-occurrence payloads assembled in-task, no (doc_id, term)
+      exchange; the offset columns are dropped when only positions
+      are asked for.
 
-    ``with_positions=True`` adds ``positions array<int>`` (0-based
-    token indexes, ``size(positions) == tf``) — the per-token position
-    payload of the reference's term-vector contract
-    (`TermVectorQuery.java:60-76`; fixture `TermVectorTokensTest.java`
-    carries a ``position`` per token).  The posexplode→collect_list agg
-    still combines map-side (docs are scan-contiguous), so the shuffle
-    carries one row per posting, positions nested."""
+    ``positions`` are 0-based token indexes (``size(positions) == tf``)
+    — the per-token position payload of the reference's term-vector
+    contract (`TermVectorQuery.java:60-76`; fixture
+    `TermVectorTokensTest.java` carries a ``position`` per token);
+    ``start_offsets``/``end_offsets`` are the char spans of the
+    ``offsets`` flag."""
     from ..analyzer.spark_udfs import JVM_TOKEN_EXPRS
-
-    if fused is None:
-        # measured round 5 (BENCH/SCALING_FUSED_8x32.md): with
-        # fused="always" as default the 8→32 scaling median collapses
-        # to 0.626 vs the explode plan's 0.834 — the Python-side fused
-        # postings phase stops scaling once the shared memory bus
-        # saturates, while the JVM explode plan keeps scaling — and the
-        # 32-core ABSOLUTE build is slower (15.0–17.7 s vs ~13 s).  So
-        # the single-box default stays the explode plan for JVM
-        # analyzers (True); deploy clusters with SPARK_GRAFT_FUSED=
-        # always (or fused="always") where the removed 1.6 GB exchange
-        # crosses a real network.
-        fused = {"always": "always", "false": False}.get(
-            os.environ.get("SPARK_GRAFT_FUSED", "").lower(), True)
 
     doc_lengths = tokenize_docs(docs, text_col, analyzer, doc_id_col).select(
         "doc_id", "dl"
     )
     dc_obs = None
 
-    if with_offsets and fused:
-        # fused path (default): postings with nested per-occurrence
-        # payloads assembled inside the tokenize task — no (doc_id,
-        # term) exchange at all (`tokenize_occurrence_postings`)
+    if with_positions or with_offsets:
         postings = tokenize_occurrence_postings(
             docs, text_col, analyzer, doc_id_col)
-    elif with_offsets:
-        # plan-level cross-check twin (fused=False): occurrence rows
-        # carry (pos, start, end); aggregate per posting with ALL
-        # per-occurrence payloads position-sorted in lockstep
-        # (sort_array on struct sorts by pos, the first field)
-        occ = tokenize_occurrences(docs, text_col, analyzer, doc_id_col)
-        triples = F.sort_array(F.collect_list(
-            F.struct("pos", "start_offset", "end_offset")
-        ))
-        postings = (
-            occ.groupBy("doc_id", "term")
-            .agg(
-                F.count(F.lit(1)).alias("tf"),
-                F.first("dl").alias("dl"),
-                triples.alias("_occ"),
-            )
-            .select(
-                "doc_id", "term", "tf", "dl",
-                F.transform("_occ", lambda s: s["pos"].cast("int"))
-                .alias("positions"),
-                F.transform("_occ", lambda s: s["start_offset"])
-                .alias("start_offsets"),
-                F.transform("_occ", lambda s: s["end_offset"])
-                .alias("end_offsets"),
-            )
-        )
-    elif with_positions and fused == "always":
-        # honor the explicit zero-exchange request for positions-only
-        # builds too (round-5 fix: this combination used to fall
-        # through to the explode→groupBy plan silently): reuse the
-        # fused occurrence plan and drop the offset payloads — the
-        # extra per-token offset arithmetic is task-local, and the
-        # point of "always" is removing the exchange, not the flops
-        postings = tokenize_occurrence_postings(
-            docs, text_col, analyzer, doc_id_col
-        ).drop("start_offsets", "end_offsets")
-    elif with_positions:
-        tok = tokenize_docs(docs, text_col, analyzer, doc_id_col)
-        postings = (
-            tok.select("doc_id", "dl",
-                       F.posexplode("tokens").alias("pos", "term"))
-            .groupBy("doc_id", "term")
-            .agg(
-                F.count(F.lit(1)).alias("tf"),
-                F.first("dl").alias("dl"),
-                F.sort_array(F.collect_list("pos")).alias("positions"),
-            )
-        )
-    elif fused == "always" or (fused and analyzer not in JVM_TOKEN_EXPRS):
+        if not with_offsets:
+            postings = postings.drop("start_offsets", "end_offsets")
+    elif analyzer not in JVM_TOKEN_EXPRS:
         postings = tokenize_postings(docs, text_col, analyzer, doc_id_col)
     else:
         import uuid
 
         from pyspark.sql import Observation
 
+        # JVM analyzers stay on the codegen explode plan even though the
+        # in-task plan has no pre-encode exchange: measured on one box,
+        # the in-task plan's Python postings phase stops scaling once
+        # the memory bus saturates (8→32-core scaling 0.626 vs 0.834,
+        # `BENCH/SCALING_FUSED_8x32.md`)
         tok = tokenize_docs(docs, text_col, analyzer, doc_id_col)
         # unique name: plans of two logical indexes may legally meet in
         # one query (union_indexes / cross_fields), and Spark rejects

@@ -123,7 +123,8 @@ def deleted_array(
 
     Deliberately a collect: the tombstone set is side-table small (see
     module docstring); it rides to scoring tasks in the closure.
-    GUARDED: when the (cheap, no-job) lineage upper bound exceeds
+    GUARDED: when the (cheap, no-job) upper bound from the parquet
+    footer row counts (``deleted_count_upper_bound``) exceeds
     ``max_driver_rows``, raises :class:`TombstoneOverflowError` instead
     of materializing O(deleted) driver memory — callers fall back to
     the ``deleted_df`` anti-join path (query modules do so
@@ -181,9 +182,6 @@ def compact(index: PhysicalIndex, out_path: str,
     postings = index.logical_postings()
     if deleted is not None:
         postings = postings.join(F.broadcast(deleted), "doc_id", "left_anti")
-    if "positions" in postings.columns:
-        # the encoder re-derives pos payloads from the positions column
-        pass
     term_stats = postings.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
     )

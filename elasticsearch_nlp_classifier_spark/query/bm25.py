@@ -38,6 +38,18 @@ def idf_col(df_col, doc_count: int):
     )
 
 
+def bm25_contrib(weight, avgdl: float):
+    """``weight * tf / (tf + k1 * (1 - b + b * dl / avgdl))`` over the
+    ``tf`` and ``dl`` columns — the tf-saturation term every DataFrame
+    scorer builds (``weight`` is idf, or boost × idf; an ``avgdl`` of 0
+    counts as 1)."""
+    return weight * F.col("tf") / (
+        F.col("tf")
+        + F.lit(K1) * (F.lit(1.0 - B)
+                       + F.lit(B) * F.col("dl") / F.lit(float(avgdl) or 1.0))
+    )
+
+
 def analyze_queries(queries: DataFrame, analyzer: str = "code") -> DataFrame:
     """(query_id, term) — unique analyzed terms per query."""
     if analyzer == "simple_code":
@@ -67,20 +79,11 @@ def bm25_scores(
         "idf", idf_col(F.col("df"), stats["doc_count"])
     )
 
-    avgdl = F.lit(float(stats["avgdl"]) or 1.0)
     return (
         index.postings.join(
             F.broadcast(qterms.select("query_id", "term", "idf")), "term"
         )
-        .withColumn(
-            "contrib",
-            F.col("idf")
-            * F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / avgdl)
-            ),
-        )
+        .withColumn("contrib", bm25_contrib(F.col("idf"), stats["avgdl"]))
         .groupBy("query_id", "doc_id")
         .agg(F.sum("contrib").alias("score"))
     )
@@ -172,7 +175,6 @@ def bool_query_frame(
         "idf", idf_col(F.col("df"), stats["doc_count"])
     )
 
-    avgdl = F.lit(float(stats["avgdl"]) or 1.0)
     per_term = (
         index.postings.join(
             F.broadcast(terms.select("term", "clause", "boost", "idf")),
@@ -180,10 +182,7 @@ def bool_query_frame(
         )
         .withColumn(
             "contrib",
-            F.col("boost") * F.col("idf") * F.col("tf")
-            / (F.col("tf")
-               + F.lit(K1) * (F.lit(1.0 - B)
-                              + F.lit(B) * F.col("dl") / avgdl)),
+            bm25_contrib(F.col("boost") * F.col("idf"), stats["avgdl"]),
         )
     )
     agg = per_term.groupBy("doc_id").agg(
@@ -287,7 +286,6 @@ def explain_score(
     terms = sorted(set(get_analyzer(analyzer).tokenize(query_text)))
     spark = index.postings.sparkSession
     probe = spark.createDataFrame([(t,) for t in terms], "term string")
-    avgdl = F.lit(float(stats["avgdl"]) or 1.0)
     hit = (
         index.postings.where(F.col("doc_id") == doc_id)
         .join(F.broadcast(probe), "term")
@@ -298,12 +296,7 @@ def explain_score(
         .join(index.term_stats.select("term", "df"), "term", "left")
         .withColumn("idf", idf_col(F.coalesce(F.col("df"), F.lit(0)),
                                    stats["doc_count"]))
-        .withColumn(
-            "tf_hat",
-            F.col("tf") / (F.col("tf") + F.lit(K1)
-                           * (F.lit(1.0 - B)
-                              + F.lit(B) * F.col("dl") / avgdl)),
-        )
+        .withColumn("tf_hat", bm25_contrib(F.lit(1.0), stats["avgdl"]))
         .withColumn("contrib", F.col("idf") * F.col("tf_hat"))
         .withColumn("matched", F.col("tf").isNotNull())
     )

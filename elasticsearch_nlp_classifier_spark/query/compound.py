@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 
 from ..analyzer.chain import get_analyzer
 from ..index.build import LogicalIndex
-from .bm25 import B, K1, idf_col
+from .bm25 import bm25_contrib, idf_col
 
 _TOPK_SCHEMA = "rank bigint, doc_id bigint, score double"
 
@@ -37,16 +37,10 @@ def _contribs(index: LogicalIndex, clause_df: DataFrame) -> DataFrame:
     terms = clause_df.join(index.term_stats, "term", "left").withColumn(
         "idf", idf_col(F.col("df"), stats["doc_count"])
     )
-    avgdl = F.lit(float(stats["avgdl"]) or 1.0)
     keep = [c for c in clause_df.columns if c != "term"]
     return index.postings.join(
         F.broadcast(terms.select("term", "idf", *keep)), "term"
-    ).withColumn(
-        "contrib",
-        F.col("idf") * F.col("tf")
-        / (F.col("tf")
-           + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / avgdl)),
-    )
+    ).withColumn("contrib", bm25_contrib(F.col("idf"), stats["avgdl"]))
 
 
 def _topk(scored: DataFrame, k: int) -> DataFrame:
@@ -244,16 +238,13 @@ def cross_fields_topk(
 
     parts = []
     for _, index in sorted(indexes.items()):
-        avgdl = F.lit(float(index.corpus_stats["avgdl"]) or 1.0)
         parts.append(
             index.postings.join(
                 F.broadcast(blended.select("term", "idf")), "term"
             ).select(
                 "doc_id", "term",
-                (F.col("idf") * F.col("tf")
-                 / (F.col("tf") + F.lit(K1)
-                    * (F.lit(1.0 - B)
-                       + F.lit(B) * F.col("dl") / avgdl))).alias("contrib"),
+                bm25_contrib(F.col("idf"), index.corpus_stats["avgdl"])
+                .alias("contrib"),
             )
         )
     union = parts[0]

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..index.build import LogicalIndex
-from .bm25 import B, K1, idf_col
+from .bm25 import bm25_contrib, idf_col
 
 
 def _ranked(scored: DataFrame, k: int, extra: list[str] = ()) -> DataFrame:
@@ -69,15 +69,9 @@ def _bm25_scores(
     probe = tdf.join(index.term_stats, "term", "left").withColumn(
         "idf", idf_col(F.col("df"), stats["doc_count"])
     )
-    avgdl = F.lit(float(stats["avgdl"]) or 1.0)
     return (
         index.postings.join(F.broadcast(probe.select("term", "idf")), "term")
-        .withColumn(
-            "contrib",
-            F.col("idf") * F.col("tf")
-            / (F.col("tf")
-               + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / avgdl)),
-        )
+        .withColumn("contrib", bm25_contrib(F.col("idf"), stats["avgdl"]))
         .groupBy("doc_id")
         .agg(F.sum("contrib").alias("score"))
     )

@@ -115,7 +115,7 @@ def highlight_from_offsets(
     """Highlight from STORED char offsets — Lucene's fast-vector/
     postings highlighter, vs :func:`highlight`'s re-analyzing one.
     ``index`` must be built with ``with_offsets=True``
-    (`index/build.tokenize_occurrences`); markup positions come from
+    (`index/build.tokenize_occurrence_postings`); markup positions come from
     the index payloads, never from re-tokenizing the text, so the
     marked spans are exactly the analyzed tokens that matched (a
     stemmed query term highlights the original surface form — the

@@ -124,7 +124,7 @@ def percolate_scored(
     queries broadcast; one hash aggregation per (doc, query).  Returns
     ``(doc_id, query_id, matched_terms, score)``.
     """
-    from .bm25 import B, K1, idf_col
+    from .bm25 import bm25_contrib, idf_col
 
     stats = index.corpus_stats
     toks = docs.select(
@@ -135,19 +135,13 @@ def percolate_scored(
         F.count(F.lit(1)).alias("tf")
     )
     dl_tbl = tf_tbl.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    avgdl = F.lit(float(stats["avgdl"]) or 1.0)
     contrib = (
         tf_tbl.join(F.broadcast(registered), "term")
         .join(index.term_stats.select("term", "df"), "term", "left")
         .join(dl_tbl, "doc_id")
         .withColumn("idf", idf_col(F.coalesce(F.col("df"), F.lit(0)),
                                    stats["doc_count"]))
-        .withColumn(
-            "c",
-            F.col("idf") * F.col("tf")
-            / (F.col("tf") + F.lit(K1)
-               * (F.lit(1.0 - B) + F.lit(B) * F.col("dl") / avgdl)),
-        )
+        .withColumn("c", bm25_contrib(F.col("idf"), stats["avgdl"]))
     )
     return (
         contrib.groupBy("doc_id", "query_id")

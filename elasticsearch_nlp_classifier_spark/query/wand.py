@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 
 from ..index.blocks import N_TERM_BUCKETS, PhysicalIndex
 from ..index.codec import segmented_delta_decode, vb_decode
-from .bm25 import analyze_queries, idf_col
 
 RESULT_SCHEMA = "query_id bigint, rank int, doc_id bigint, score double"
 

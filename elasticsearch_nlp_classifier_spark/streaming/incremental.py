@@ -19,7 +19,8 @@ streaming-native form on top of the same block encoder:
   docID-disjoint (doc_ids assigned monotonically per batch), so
   block-max WAND remains exact without any cross-segment merge.
 - ``compact_segments``: the Lucene background merge — decode all
-  segments' postings, re-encode into a fresh single-segment index.
+  segments' postings, re-encode into a fresh single-segment index; the
+  ``deletes/`` tombstones carry over unchanged.
 
 Scale shape: a micro-batch touches only its own rows; the only global
 state is the (tiny) per-segment stats tables, never the posting data.
@@ -29,6 +30,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -183,7 +185,12 @@ def compact_segments(
     salt_threshold: int = 50_000,
 ) -> PhysicalIndex:
     """Lucene-style merge: all segments -> one fresh canonical index
-    (global block sizes restored, stats folded into the base layout)."""
+    (global block sizes restored, stats folded into the base layout).
+
+    Tombstoned postings are kept, and so is the ``deletes/`` side table
+    that masks them: stats keep counting deleted docs, exactly as
+    before the merge (Lucene-until-merge semantics), so the compacted
+    index answers every query as its source does."""
     spark = index.spark
     os.makedirs(out_path, exist_ok=True)
     postings = index.logical_postings()
@@ -205,4 +212,7 @@ def compact_segments(
     )
     with open(f"{out_path}/corpus_stats.json", "w") as f:
         json.dump(stats, f)
+    shutil.rmtree(f"{out_path}/deletes", ignore_errors=True)
+    if os.path.isdir(f"{index.path}/deletes"):
+        shutil.copytree(f"{index.path}/deletes", f"{out_path}/deletes")
     return PhysicalIndex(out_path, spark)

@@ -58,13 +58,6 @@ def main() -> None:
                     help="store per-occurrence token positions (pos_vb)")
     ap.add_argument("--with-offsets", action="store_true",
                     help="store positions + char offsets (off_vb/len_vb)")
-    ap.add_argument("--fused", choices=["auto", "always", "explode"],
-                    default="auto",
-                    help="postings plan: auto (JVM analyzers use the "
-                         "codegen explode plan), always (zero "
-                         "pre-encode exchange — the cluster default, "
-                         "see BASELINE.md bytes-over-the-bus), explode "
-                         "(force the explode plan)")
     args = ap.parse_args()
 
     from elasticsearch_nlp_classifier_spark.corpus.doc_ids import (
@@ -89,18 +82,6 @@ def main() -> None:
             raise SystemExit(f"ingest verification failed: {bad} bad rows")
 
     t0 = time.time()
-    logical = None
-    if args.fused != "auto":
-        from elasticsearch_nlp_classifier_spark.index import (
-            build_logical_index,
-        )
-
-        logical = build_logical_index(
-            docs, text_col=args.text_col, analyzer=args.analyzer,
-            fused=("always" if args.fused == "always" else False),
-            with_positions=args.with_positions,
-            with_offsets=args.with_offsets,
-        )
     build_physical_index(
         docs,
         args.output,
@@ -109,7 +90,6 @@ def main() -> None:
         block_size=args.block_size,
         n_salts=args.n_salts,
         salt_threshold=args.salt_threshold,
-        logical=logical,
         with_positions=args.with_positions,
         with_offsets=args.with_offsets,
     )

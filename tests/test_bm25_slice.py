@@ -115,24 +115,29 @@ def test_bm25_vs_duckdb(index, spark):
     np.testing.assert_allclose(got.score.to_numpy(), want.score.to_numpy(), atol=1e-9)
 
 
-def test_fused_postings_match_explode_groupby(spark, corpus_tiny_docs=None):
-    """The fused mapInPandas postings path must equal the
-    explode+groupBy plan row-for-row, for both a pandas analyzer and
-    the JVM simple_code expressions."""
-    from elasticsearch_nlp_classifier_spark.corpus import gen_corpus_pdf
+@pytest.fixture(scope="module")
+def docs80(spark):
     from elasticsearch_nlp_classifier_spark.corpus.doc_ids import (
         assign_doc_ids,
     )
-    from elasticsearch_nlp_classifier_spark.index import build_logical_index
 
     docs = assign_doc_ids(spark.createDataFrame(gen_corpus_pdf(80)))
-    for analyzer in ("code", "simple_code"):
-        a = build_logical_index(docs, "content", analyzer, fused=True)
-        b = build_logical_index(docs, "content", analyzer, fused=False)
-        ga = sorted(map(tuple, a.postings.collect()))
-        gb = sorted(map(tuple, b.postings.select(
-            "doc_id", "term", "tf", "dl").collect()))
-        assert ga == gb, analyzer
+    rows = [(r["doc_id"], r["content"])
+            for r in docs.select("doc_id", "content").collect()]
+    return docs, rows
+
+
+def test_postings_plans_match_oracle(docs80):
+    """The no-payload postings plan — codegen explode for the JVM
+    analyzers, `tokenize_postings` for Python chains — equals the
+    per-doc tokenize + Counter oracle row for row."""
+    from test_offsets import oracle_postings
+
+    docs, rows = docs80
+    for analyzer in ("code", "simple_code", "default", "simple_code_edge"):
+        got = sorted(map(tuple, build_logical_index(
+            docs, "content", analyzer).postings.collect()))
+        assert got == oracle_postings(rows, analyzer), analyzer
 
 
 def test_msearch_batch_matches_individual_topk(index):
@@ -176,61 +181,49 @@ def test_msearch_empty_rejected(index):
         msearch(index, [])
 
 
-def test_tokenize_postings_arrow_parity(spark):
+def test_tokenize_postings_arrow_parity(docs80):
     """Round 4: `tokenize_postings` (batch one-finditer tokenize +
-    mapInArrow transport) must equal the explode+groupBy plan for the
+    mapInArrow transport) must equal the per-doc oracle for the
     batchable JVM analyzers AND for a per-doc Python chain — called
     directly, since `build_logical_index` routes JVM analyzers to the
     explode plan."""
-    from elasticsearch_nlp_classifier_spark.corpus import gen_corpus_pdf
-    from elasticsearch_nlp_classifier_spark.corpus.doc_ids import (
-        assign_doc_ids,
-    )
-    from elasticsearch_nlp_classifier_spark.index import (
-        build_logical_index,
-    )
+    from test_offsets import oracle_postings
+
     from elasticsearch_nlp_classifier_spark.index.build import (
         tokenize_postings,
     )
 
-    docs = assign_doc_ids(spark.createDataFrame(gen_corpus_pdf(80)))
+    docs, rows = docs80
     for analyzer in ("code", "simple_code", "default"):
         got = sorted(map(tuple, tokenize_postings(
             docs, "content", analyzer).collect()))
-        want = sorted(map(tuple, build_logical_index(
-            docs, "content", analyzer, fused=False,
-        ).postings.select("doc_id", "term", "tf", "dl").collect()))
-        assert got == want, analyzer
+        assert got == oracle_postings(rows, analyzer), analyzer
 
 
-def test_fused_always_plan_matches_and_builds(spark, tmp_path):
-    """`fused="always"` (the cluster deployment knob: zero pre-encode
-    exchange) must produce identical postings for a JVM analyzer and
-    feed a working physical build + WAND query."""
-    import pandas as pd
-
-    from elasticsearch_nlp_classifier_spark.corpus import gen_corpus_pdf
+def test_python_analyzer_build_and_wand(spark, tmp_path):
+    """A Python-chain analyzer (`tokenize_postings` plan, doc count by
+    explicit aggregation) feeds a working physical build whose WAND
+    top-k equals brute-force BM25 over the same postings."""
     from elasticsearch_nlp_classifier_spark.corpus.doc_ids import (
         assign_doc_ids,
     )
-    from elasticsearch_nlp_classifier_spark.index import (
-        build_logical_index,
-    )
     from elasticsearch_nlp_classifier_spark.index.blocks import (
-        build_physical_index, PhysicalIndex,
+        build_physical_index,
     )
     from elasticsearch_nlp_classifier_spark.query.wand import wand_topk
 
     docs = assign_doc_ids(spark.createDataFrame(gen_corpus_pdf(120)))
-    a = build_logical_index(docs, "content", "code", fused="always")
-    b = build_logical_index(docs, "content", "code", fused=False)
-    assert sorted(map(tuple, a.postings.collect())) == \
-        sorted(map(tuple, b.postings.select(
-            "doc_id", "term", "tf", "dl").collect()))
-
     idx = build_physical_index(
-        docs, str(tmp_path / "fidx"), logical=a, block_size=16,
+        docs, str(tmp_path / "pidx"), analyzer="default", block_size=16,
         n_buckets=4)
+    assert idx.corpus_stats["doc_count"] == 120
     q = pd.DataFrame({"query_id": [0], "query_text": ["def import"]})
-    ranked = wand_topk(idx, q, k=5, analyzer="code").toPandas()
-    assert len(ranked) == 5 and ranked["rank"].tolist() == list(range(1, 6))
+    ranked = wand_topk(idx, q, k=5, analyzer="default",
+                       n_buckets=4).toPandas()
+    assert ranked["rank"].tolist() == list(range(1, 6))
+    want = bm25_topk(build_logical_index(docs, "content", "default"),
+                     spark.createDataFrame(q), k=5,
+                     analyzer="default").toPandas()
+    assert ranked["doc_id"].tolist() == want["doc_id"].tolist()
+    np.testing.assert_allclose(ranked["score"].to_numpy(),
+                               want["score"].to_numpy(), atol=1e-9)

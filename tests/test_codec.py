@@ -85,51 +85,13 @@ def test_vb_encode_segmented_matches_per_block():
         assert buf[off[i]: off[i + 1]] == vb_encode(vals[s:e])
 
 
-def test_vectorized_partition_encode_matches_naive():
+def _postings_runs(seed, payload):
+    """(term, salt, doc_id)-sorted postings of random (term, salt) runs
+    spanning several 16-posting blocks, with a salted term; ``payload``
+    adds per-posting positions and start/end offsets."""
     import pandas as pd
 
-    from elasticsearch_nlp_classifier_spark.index.blocks import (
-        _encode_group, _encode_partition_groups,
-    )
-    rng = np.random.default_rng(11)
-    rows = []
-    for t in ["alpha", "beta", "gamma", "delta"]:
-        for salt in ([0] if t != "beta" else [0, 1, 2]):
-            n = int(rng.integers(1, 60))
-            ids = np.sort(rng.choice(np.arange(1, 500), n, replace=False))
-            for d in ids:
-                rows.append((t, salt, int(d), int(rng.integers(1, 9)),
-                             int(rng.integers(5, 200))))
-    pdf = pd.DataFrame(rows, columns=["term", "salt", "doc_id", "tf", "dl"])
-    pdf = pdf.sort_values(["term", "salt", "doc_id"]).reset_index(drop=True)
-
-    got = _encode_partition_groups(pdf, block_size=16, avgdl=42.5)
-    naive = pd.concat(
-        [_encode_group(g, 16, 42.5)
-         for _, g in pdf.groupby(["term", "salt"], sort=False)],
-        ignore_index=True,
-    )
-    key = ["term", "salt", "block_id"]
-    got = got.sort_values(key).reset_index(drop=True)
-    naive = naive.sort_values(key).reset_index(drop=True)
-    assert len(got) == len(naive)
-    for col in ["term", "salt", "block_id", "n", "first_doc", "last_doc",
-                "docs_vb", "tfs_vb", "dls_vb"]:
-        assert list(got[col]) == list(naive[col]), col
-    assert np.allclose(got["max_tfhat"], naive["max_tfhat"], atol=1e-12)
-
-
-def test_arrow_partition_encode_matches_pandas():
-    """_encode_arrow (mapInArrow hot path, zero-copy buffers) must emit
-    byte-identical blocks to the pandas reference encoder — including
-    the positions payload."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from elasticsearch_nlp_classifier_spark.index.blocks import (
-        _encode_arrow, _encode_partition_groups,
-    )
-    rng = np.random.default_rng(23)
+    rng = np.random.default_rng(seed)
     rows = []
     for t in ["alpha", "beta", "gamma", "delta", "eps"]:
         for salt in ([0] if t != "beta" else [0, 1, 2]):
@@ -137,16 +99,36 @@ def test_arrow_partition_encode_matches_pandas():
             ids = np.sort(rng.choice(np.arange(1, 500), n, replace=False))
             for d in ids:
                 tf = int(rng.integers(1, 6))
-                positions = np.sort(
-                    rng.choice(np.arange(0, 300), tf, replace=False)
-                ).tolist()
-                rows.append((t, salt, int(d), tf,
-                             int(rng.integers(5, 200)), positions))
-    pdf = pd.DataFrame(rows, columns=["term", "salt", "doc_id", "tf",
-                                      "dl", "positions"])
-    pdf = pdf.sort_values(["term", "salt", "doc_id"]).reset_index(drop=True)
+                row = [t, salt, int(d), tf, int(rng.integers(5, 200))]
+                if payload:
+                    positions = np.sort(
+                        rng.choice(np.arange(0, 300), tf, replace=False))
+                    starts = positions * 7 + rng.integers(0, 3, tf)
+                    ends = starts + rng.integers(1, 20, tf)
+                    row += [positions.tolist(), starts.tolist(),
+                            ends.tolist()]
+                rows.append(tuple(row))
+    cols = ["term", "salt", "doc_id", "tf", "dl"] + (
+        ["positions", "start_offsets", "end_offsets"] if payload else [])
+    pdf = pd.DataFrame(rows, columns=cols)
+    return pdf.sort_values(["term", "salt", "doc_id"]).reset_index(drop=True)
 
-    want = _encode_partition_groups(pdf, block_size=16, avgdl=42.5)
+
+def _assert_arrow_matches_naive(pdf):
+    """_encode_arrow (mapInArrow hot path, zero-copy buffers) must emit
+    blocks byte-identical to the per-group reference `_encode_group` on
+    every column the input's payload shape produces."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from elasticsearch_nlp_classifier_spark.index.blocks import (
+        _encode_arrow, _encode_group,
+    )
+    want = pd.concat(
+        [_encode_group(g, 16, 42.5)
+         for _, g in pdf.groupby(["term", "salt"], sort=False)],
+        ignore_index=True,
+    )
     # the Arrow hot path keys groups by the fixed-width tid, never the
     # string — feed it a deterministic term->tid mapping and map back
     tid_of = {t: i + 1000 for i, t in enumerate(sorted(pdf["term"].unique()))}
@@ -161,7 +143,17 @@ def test_arrow_partition_encode_matches_pandas():
     got = got.sort_values(key).reset_index(drop=True)
     want = want.sort_values(key).reset_index(drop=True)
     assert len(got) == len(want)
-    for col in ["term", "salt", "block_id", "n", "first_doc", "last_doc",
-                "docs_vb", "tfs_vb", "dls_vb", "pos_vb"]:
+    assert sorted(got.columns) == sorted(want.columns)
+    for col in want.columns.drop("max_tfhat"):
         assert list(got[col]) == list(want[col]), col
     assert np.allclose(got["max_tfhat"], want["max_tfhat"], atol=1e-12)
+
+
+def test_vectorized_partition_encode_matches_naive():
+    _assert_arrow_matches_naive(_postings_runs(11, payload=False))
+
+
+def test_arrow_partition_encode_matches_pandas():
+    """Including the positions and offsets payloads (pos_vb, off_vb,
+    len_vb)."""
+    _assert_arrow_matches_naive(_postings_runs(23, payload=True))

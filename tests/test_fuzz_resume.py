@@ -66,16 +66,15 @@ def test_fuzz_double_crash_resume_identical(spark, docs, seed,
     remaining = N_BUCKETS - (c1 + 1)
     c2 = rng.randint(0, max(0, remaining - 2))
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_physical_index(docs, crashy, resume=True,
-                             fail_after_bucket=c2, **kw)
+        build_physical_index(docs, crashy, fail_after_bucket=c2, **kw)
     assert len(os.listdir(f"{crashy}/manifests")) == c1 + 1 + c2 + 1
 
-    build_physical_index(docs, crashy, resume=True, **kw)
+    build_physical_index(docs, crashy, **kw)
     assert _manifest_shas(crashy) == _manifest_shas(clean)
 
     # idempotent re-submit on the complete index: nothing changes
     before = _manifest_shas(crashy)
-    build_physical_index(docs, crashy, resume=True, **kw)
+    build_physical_index(docs, crashy, **kw)
     assert _manifest_shas(crashy) == before
 
     # and the resumed index answers queries identically

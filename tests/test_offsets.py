@@ -352,29 +352,6 @@ def test_batch_offsets_declines_unvectorizable_chains():
         assert batch_tokenize_with_offsets(an, ["a b"]) is None
 
 
-def test_occurrences_df_fast_path_matches_slow(spark):
-    """The mapInPandas surface: occurrence rows via the batch path
-    (code analyzer) equal a hand-run of the per-doc chain."""
-    from elasticsearch_nlp_classifier_spark.index.build import (
-        tokenize_occurrences,
-    )
-
-    rows = [(i, t) for i, t in enumerate(NASTY + TEXTS) if t is not None]
-    docs = spark.createDataFrame(rows, "doc_id bigint, content string")
-    got = (
-        tokenize_occurrences(docs, analyzer="code")
-        .orderBy("doc_id", "pos").collect()
-    )
-    an = get_analyzer("code")
-    want = []
-    for i, t in rows:
-        triples = an.tokenize_with_offsets(t)
-        for p, (tok, s, e) in enumerate(triples):
-            want.append((i, tok, p, s, e, len(triples)))
-    assert [(r["doc_id"], r["term"], r["pos"], r["start_offset"],
-             r["end_offset"], r["dl"]) for r in got] == want
-
-
 def test_simple_code_pos_nonascii_lower_parity():
     """ADVICE r3: U+212A KELVIN SIGN lowers to ASCII 'k'; 'İ' lowers to
     two chars.  The offsets path must still emit the SAME token
@@ -445,63 +422,53 @@ def test_highlight_merges_overlapping_and_duplicate_spans(spark):
     assert out2[1] == "<em>beta gamma delta</em> end"
 
 
-def test_fused_occurrence_postings_match_groupby_plan(spark):
-    """The fused no-shuffle offsets postings
-    (`tokenize_occurrence_postings`, build default) must equal the
-    explode+groupBy construction (`fused=False`) row for row — both
-    analyzers, batch and per-doc tokenizer paths."""
-    import pandas as pd
+def oracle_postings(rows, analyzer, with_positions=False,
+                    with_offsets=False):
+    """Sorted postings rows ``(doc_id, term, tf, dl[, positions]
+    [, start_offsets, end_offsets])`` of ``(doc_id, text)`` rows, built
+    one document at a time from `Analyzer.tokenize` /
+    `Analyzer.tokenize_with_offsets` and a per-doc `Counter` — the
+    reference every postings plan of `build_logical_index` is held to."""
+    from collections import Counter
 
-    rows = [(i, t) for i, t in enumerate(NASTY + TEXTS) if t is not None]
+    an = get_analyzer(analyzer)
+    out = []
+    for doc_id, text in rows:
+        if text is None:
+            continue
+        occ = an.tokenize_with_offsets(text)
+        toks = an.tokenize(text)
+        for term, tf in Counter(toks).items():
+            row = (doc_id, term, tf, len(toks))
+            mine = [(p, s, e) for p, (t, s, e) in enumerate(occ)
+                    if t == term]
+            if with_positions or with_offsets:
+                row += ([p for p, _, _ in mine],)
+            if with_offsets:
+                row += ([s for _, s, _ in mine], [e for _, _, e in mine])
+            out.append(row)
+    return sorted(out)
+
+
+@pytest.mark.parametrize("analyzer",
+                         ["code", "simple_code", "default",
+                          "simple_code_edge"])
+def test_postings_plans_match_oracle_with_payloads(spark, analyzer):
+    """Every payload shape of `build_logical_index` — none (explode or
+    `tokenize_postings`), positions only and positions + offsets (both
+    `tokenize_occurrence_postings`) — equals the per-doc oracle row for
+    row, on batch-tokenizable and per-doc analyzer chains; positions-only
+    builds carry no offset columns."""
+    rows = [(i, t) for i, t in enumerate(NASTY + TEXTS)]
     docs = spark.createDataFrame(rows, "doc_id bigint, content string")
-    for analyzer in ("code", "simple_code", "simple_code_edge"):
-        fused = build_logical_index(
-            docs, analyzer=analyzer, with_offsets=True,
-        ).postings.toPandas()
-        slow = build_logical_index(
-            docs, analyzer=analyzer, with_offsets=True, fused=False,
-        ).postings.toPandas()
-
-        def canon(pdf):
-            pdf = pdf.copy()
-            for c in ("positions", "start_offsets", "end_offsets"):
-                pdf[c] = pdf[c].map(
-                    lambda a: tuple(int(x) for x in a))
-            return pdf.sort_values(["doc_id", "term"]) \
-                .reset_index(drop=True)
-
-        pd.testing.assert_frame_equal(canon(fused), canon(slow),
-                                      check_dtype=False)
-
-
-def test_fused_always_with_positions_only(spark):
-    """Round-5 fix (ADVICE r4): `fused="always"` + `with_positions`
-    (no offsets) must take the zero-exchange fused plan, not silently
-    fall through to explode→groupBy — and its postings must equal the
-    explode plan's, schema included (no offset columns)."""
-    import pandas as pd
-
-    rows = [(i, t) for i, t in enumerate(NASTY + TEXTS) if t is not None]
-    docs = spark.createDataFrame(rows, "doc_id bigint, content string")
-    for analyzer in ("code", "simple_code"):
-        fast = build_logical_index(
-            docs, analyzer=analyzer, with_positions=True, fused="always",
+    for with_positions, with_offsets in ((False, False), (True, False),
+                                         (False, True), (True, True)):
+        postings = build_logical_index(
+            docs, analyzer=analyzer, with_positions=with_positions,
+            with_offsets=with_offsets,
         ).postings
-        assert "start_offsets" not in fast.columns
-        # the fused plan has no groupBy exchange pre-encode
-        plan = fast._jdf.queryExecution().optimizedPlan().toString()
-        assert "Aggregate" not in plan, plan
-        slow = build_logical_index(
-            docs, analyzer=analyzer, with_positions=True,
-        ).postings.toPandas()
-
-        def canon(pdf):
-            pdf = pdf.copy()
-            pdf["positions"] = pdf["positions"].map(
-                lambda a: tuple(int(x) for x in a))
-            return pdf.sort_values(["doc_id", "term"]) \
-                .reset_index(drop=True)[
-                    ["doc_id", "term", "tf", "dl", "positions"]]
-
-        pd.testing.assert_frame_equal(canon(fast.toPandas()), canon(slow),
-                                      check_dtype=False)
+        assert ("start_offsets" in postings.columns) == with_offsets
+        got = sorted(tuple(r) for r in postings.collect())
+        assert got == oracle_postings(
+            rows, analyzer, with_positions, with_offsets
+        ), (analyzer, with_positions, with_offsets)

@@ -113,7 +113,7 @@ def test_checkpoint_resume_identical(spark, corpus_sf_tiny, logical, tmp_path_fa
         )
     done_before = sorted(os.listdir(f"{out_b}/manifests"))
     assert len(done_before) == 2
-    build_physical_index(corpus_sf_tiny["docs"], out_b, resume=True, **kw)
+    build_physical_index(corpus_sf_tiny["docs"], out_b, **kw)
 
     sha = {}
     for out in (out_a, out_b):
@@ -223,7 +223,7 @@ def test_checkpoint_resume_offsets_identical(spark, tmp_path_factory):
     build_physical_index(docs, out_a, **kw)
     with pytest.raises(RuntimeError, match="injected failure"):
         build_physical_index(docs, out_b, fail_after_bucket=1, **kw)
-    build_physical_index(docs, out_b, resume=True, **kw)
+    build_physical_index(docs, out_b, **kw)
 
     sha = {}
     for out in (out_a, out_b):

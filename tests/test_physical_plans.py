@@ -159,23 +159,23 @@ def test_scale_path_operators_have_no_row_python(spark):
 
 
 def test_index_build_has_single_wide_dependency(corpus_sf_tiny):
-    """Postings-plan shuffle budget: the default (explode→groupBy for
-    JVM analyzers) has exactly ONE Exchange — the map-side-combined
-    (doc_id, term) partial agg; the fused="always" cluster knob has
-    ZERO (postings assembled inside the tokenize task).  Any extra
-    Exchange in either means the pipeline regressed to
+    """Postings-plan shuffle budget: the explode plan of a JVM analyzer
+    has exactly ONE Exchange — the map-side-combined (doc_id, term)
+    partial agg; the in-task plans of a Python analyzer and of a
+    positions build have ZERO (postings assembled inside the tokenize
+    task).  Any extra Exchange means the pipeline regressed to
     shuffle-per-stage."""
     # the fixture's docs are cached; the InMemoryRelation dump replays
     # the FIXTURE's own lineage (incl. its doc-id range partition), so
     # only the plan above the cache boundary is the build's own
-    default = build_logical_index(corpus_sf_tiny["docs"])
-    p_def = plan(default.postings, mode="simple")
-    assert p_def.split("InMemoryTableScan")[0].count("Exchange") == 1, \
-        p_def
-    fused = build_logical_index(corpus_sf_tiny["docs"], fused="always")
-    p_fused = plan(fused.postings, mode="simple")
-    assert p_fused.split("InMemoryTableScan")[0].count("Exchange") == 0, \
-        p_fused
+    docs = corpus_sf_tiny["docs"]
+    for want, idx in (
+        (1, build_logical_index(docs)),
+        (0, build_logical_index(docs, analyzer="default")),
+        (0, build_logical_index(docs, with_positions=True)),
+    ):
+        p = plan(idx.postings, mode="simple")
+        assert p.split("InMemoryTableScan")[0].count("Exchange") == want, p
 
 
 def test_batch3_scoring_paths_are_jvm_only(spark):

@@ -1,6 +1,8 @@
 """Incremental (Structured Streaming) index: two micro-batches ==
 one batch build, exactly-once segment writes, compaction parity."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,6 +11,7 @@ from elasticsearch_nlp_classifier_spark.corpus.doc_ids import assign_doc_ids
 from elasticsearch_nlp_classifier_spark.index.blocks import (
     build_physical_index,
 )
+from elasticsearch_nlp_classifier_spark.index.deletes import delete_docs
 from elasticsearch_nlp_classifier_spark.query.wand import wand_topk
 from elasticsearch_nlp_classifier_spark.streaming import (
     StreamingPhysicalIndex,
@@ -110,6 +113,27 @@ def test_compaction_parity(streamed, batch_index, tmp_path_factory):
     assert [(r["query_id"], r["rank"], r["doc_id"]) for r in got] == [
         (r["query_id"], r["rank"], r["doc_id"]) for r in want
     ]
+
+
+def test_compaction_keeps_tombstones(streamed, tmp_path_factory):
+    """A doc tombstoned before a merge stays deleted after it: the
+    compacted index answers exactly as its source does, and never with
+    the deleted id (on a copy — the shared fixture stays delete-free)."""
+    base = tmp_path_factory.mktemp("compact_deletes")
+    src = StreamingPhysicalIndex(
+        shutil.copytree(streamed.path, str(base / "src")), streamed.spark)
+    victim = wand_topk(src, QUERY, k=10).collect()[0]["doc_id"]
+    delete_docs(src, [victim])
+    want = wand_topk(src, QUERY, k=10).collect()
+    compact = compact_segments(src, str(base / "out"), block_size=16,
+                               salt_threshold=50)
+    got = wand_topk(compact, QUERY, k=10).collect()
+    assert victim not in {r["doc_id"] for r in got}
+    assert [(r["query_id"], r["rank"], r["doc_id"]) for r in got] == [
+        (r["query_id"], r["rank"], r["doc_id"]) for r in want
+    ]
+    for g, w in zip(got, want):
+        assert abs(g["score"] - w["score"]) < 1e-9
 
 
 def test_replay_is_idempotent(streamed):
