@@ -223,7 +223,9 @@ def test_classify_job_algorithm_switch(tmp_path):
     pq.write_table(pa.Table.from_pandas(corpus_pdf), corpus)
 
     env = dict(os.environ)
+    # the session JVM already holds a pre-touched 8 GB sandbox heap
     env.update({"SPARK_GRAFT_SANDBOX": "1", "SPARK_GRAFT_CPUS": "4",
+                "SPARK_GRAFT_DRIVER_MEM": "2g",
                 "PYSPARK_PYTHON": sys.executable,
                 "PYSPARK_DRIVER_PYTHON": sys.executable})
     r = subprocess.run(
