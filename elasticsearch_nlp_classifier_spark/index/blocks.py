@@ -25,12 +25,20 @@ doc-disjoint and ordered, so the per-term global block sequence is just
 (salt ASC, block_id ASC) — the "merge" of salted runs is a metadata-only
 concatenation, never a posting re-sort (SURVEY §4.3).
 
-**Checkpoint/resume**: the build loops over term buckets; each bucket
-writes its parquet partition plus a JSON manifest (rows, postings,
-bytes, sha256 of the logical block content, wall time).  A re-run skips
-buckets whose manifest is already present — kill-and-rerun produces a
-byte-identical logical index (tested).  Lineage of every stage is
-appended to ``lineage.jsonl``.
+**One writer**: ``write_index`` is the only code that writes index
+data — a bulk build, its bucket resume, a streaming segment and both
+compactions all hand it a ``LogicalIndex``.  A bulk index is
+``blocks/``, ``term_stats/`` and ``corpus_stats.json``; segment ``s`` of
+a streaming-built index is ``blocks/segment=s/``,
+``seg_term_stats/segment=s/`` and ``seg_stats/segment_s.json``, with its
+manifests and lineage under ``segments/s/``.
+
+**Checkpoint/resume**: every term bucket written gets a JSON manifest
+(blocks, postings, payload bytes, an order-independent checksum of the
+logical block content, wall time).  A re-run over a target that already
+has manifests writes the missing buckets one at a time and skips the
+rest — kill-and-rerun produces a byte-identical logical index (tested).
+Lineage of every stage is appended to ``lineage.jsonl``.
 """
 
 from __future__ import annotations
@@ -197,7 +205,9 @@ def encode_blocks(
     head only); pass it when term_stats already exists to avoid an
     extra aggregation job, else it is computed here.
     ``term_dict``: distinct-term DataFrame (column ``term``) when the
-    caller already has one (e.g. term_stats); derived here otherwise."""
+    caller already has one (e.g. a cached term_stats); it is read twice,
+    by the seed check and by the string re-attachment.  Derived here
+    otherwise."""
     if hot_terms is None:
         hot_terms = [
             r[0]
@@ -220,7 +230,6 @@ def encode_blocks(
 
     if term_dict is None:
         term_dict = postings.select("term").distinct()
-    term_dict = term_dict.cache()
     if tid_seed is None:
         tid_seed = _choose_tid_seed(term_dict)
 
@@ -459,8 +468,19 @@ def term_bucket(col, n_buckets: int = N_TERM_BUCKETS):
 
 @dataclass
 class PhysicalIndex:
+    """Query surface over an index directory.  The index is segmented
+    (streaming-built, one segment per micro-batch) when ``seg_stats/``
+    exists: its term stats are then the sums over ``seg_term_stats`` and
+    its corpus stats the sums over the segments' stats files.  Blocks of
+    different segments are docID-disjoint, so block-max WAND stays exact
+    without a cross-segment merge."""
+
     path: str
     spark: SparkSession
+
+    @property
+    def segmented(self) -> bool:
+        return os.path.isdir(f"{self.path}/seg_stats")
 
     @property
     def blocks(self) -> DataFrame:
@@ -468,12 +488,28 @@ class PhysicalIndex:
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.path}/term_stats")
+        if not self.segmented:
+            return self.spark.read.parquet(f"{self.path}/term_stats")
+        return self.spark.read.parquet(f"{self.path}/seg_term_stats") \
+            .groupBy("term").agg(F.sum("df").alias("df"),
+                                 F.sum("ttf").alias("ttf"))
 
     @property
     def corpus_stats(self) -> dict:
-        with open(f"{self.path}/corpus_stats.json") as f:
-            return json.load(f)
+        if not self.segmented:
+            with open(f"{self.path}/corpus_stats.json") as f:
+                return json.load(f)
+        segs = []
+        for fn in sorted(os.listdir(f"{self.path}/seg_stats")):
+            with open(f"{self.path}/seg_stats/{fn}") as f:
+                segs.append(json.load(f))
+        out = {k: v for k, v in (segs[0] if segs else {}).items()
+               if k in ("has_positions", "has_offsets", "n_buckets")}
+        for k in ("doc_count", "sum_ttf", "sum_doc_freq"):
+            out[k] = sum(s[k] for s in segs)
+        out["avgdl"] = (out["sum_ttf"] / out["doc_count"]
+                        if out["doc_count"] else 0.0)
+        return out
 
     @property
     def has_positions(self) -> bool:
@@ -483,9 +519,12 @@ class PhysicalIndex:
     def has_offsets(self) -> bool:
         return bool(self.corpus_stats.get("has_offsets"))
 
-    def term_stats_for(
-        self, terms: list[str], n_buckets: int = N_TERM_BUCKETS,
-    ) -> dict:
+    @property
+    def n_buckets(self) -> int:
+        """Term buckets the blocks are partitioned by (``tb``)."""
+        return int(self.corpus_stats.get("n_buckets", N_TERM_BUCKETS))
+
+    def term_stats_for(self, terms: list[str]) -> dict:
         """{term: (df, tb)} for query terms, with a per-index cache —
         ``(None, None)`` for vocabulary misses (negative-cached too).
 
@@ -495,14 +534,14 @@ class PhysicalIndex:
         batch whose terms were all seen before costs ZERO stats jobs —
         the working set of query terms is tiny next to the vocabulary,
         which is why this is a cache and not a preload."""
-        caches = self.__dict__.setdefault("_term_stats_cache", {})
-        cache = caches.setdefault(n_buckets, {})  # tb depends on n_buckets
+        cache = self.__dict__.setdefault("_term_stats_cache", {})
         missing = sorted(t for t in set(terms) if t not in cache)
         if missing:
             pdf = (
                 self.term_stats.where(F.col("term").isin(missing))
                 .select("term", "df",
-                        term_bucket(F.col("term"), n_buckets).alias("tb"))
+                        term_bucket(F.col("term"), self.n_buckets)
+                        .alias("tb"))
                 .toPandas()
             )
             found = dict(zip(pdf["term"],
@@ -592,9 +631,8 @@ def _block_hash_dec(payload_cols: list[str]):
     """Per-block content hash folded to decimal(38,0).  Bucket checksum
     = SUM of these — order-independent, so it is invariant to task
     scheduling; collision-negligible for integrity/resume-identity
-    purposes.  Shared by the one-shot (observe) and per-bucket
-    (grouped-agg) paths so a resumed build reports byte-identical
-    checksums.
+    purposes.  A bucket written alone (the resume path) reports the
+    checksum it gets when written with every other bucket.
 
     xxhash64 over (key fields, payload columns), not sha256: the old
     sha256 was already truncated to 15 hex digits (~60 bits) before
@@ -631,32 +669,194 @@ BLOCKS_WRITE_OPTIONS = {
 }
 
 
-def _manifest_agg(blocks: DataFrame, group_col: str | None) -> DataFrame:
-    """Distributed, order-independent logical checksum + size metrics
-    (per-bucket/resume path; the one-shot path computes the same
-    aggregates in-pass via ``observe``)."""
-    pc = _payload_cols(blocks.columns)
-    enriched = blocks.withColumn("_h", _block_hash_dec(pc))
-    aggs = [
-        F.count(F.lit(1)).alias("blocks"),
-        F.sum("n").alias("postings"),
-        F.sum(_payload_bytes(pc)).alias("payload_bytes"),
-        F.sum("_h").alias("hsum"),
-    ]
-    if group_col:
-        return enriched.groupBy(group_col).agg(*aggs)
-    return enriched.agg(*aggs)
+def write_index(
+    logical: LogicalIndex,
+    out_path: str,
+    segment: dict | None = None,
+    block_size: int = 128,
+    n_salts: int = 16,
+    salt_threshold: int = 50_000,
+    n_buckets: int = N_TERM_BUCKETS,
+    fail_after_bucket: int | None = None,
+) -> None:
+    """Write ``logical`` as index data under ``out_path``: the blocks,
+    the term stats, a stats dict and bucket manifests.
 
+    ``segment``: None writes a bulk index; otherwise it holds the
+    segment's own entries of its stats file (``segment`` id,
+    ``doc_id_offset``, ``max_doc_id``) and the data goes to that
+    segment's directories (module docstring).  A segment owns its
+    directories, so writing it again (a replayed micro-batch) replaces
+    that segment and nothing else.
 
-def _manifest_dict(row, bucket: int, wall_s: float) -> dict:
-    return {
-        "bucket": bucket,
-        "blocks": row["blocks"],
-        "postings": int(row["postings"] or 0),
-        "payload_bytes": int(row["payload_bytes"] or 0),
-        "checksum": str(row["hsum"] or 0),
-        "wall_s": round(wall_s, 2),
+    Every pass reads the cached postings and term stats:
+
+    1. the term-stats write.  An ``Observation`` on it yields n_terms,
+       sum_doc_freq and sum_ttf; the doc count comes from the
+       tokenize-stage observation of ``logical`` when it has one (it
+       fires inside this write, which materializes the postings cache),
+       else from one ``countDistinct`` job;
+    2. hot terms and the tid seed from the cached term stats;
+    3. the blocks: ONE shuffle→encode→sort→write pass over every bucket,
+       whose bucket manifests come from an ``observe`` (per-bucket
+       conditional aggregates on a CollectMetrics node — no second scan,
+       no cache).  The local ``sortWithinPartitions(tb, term, …)`` groups
+       each task's rows by bucket directory (≤ n_buckets files per task)
+       and keeps row groups term-ordered, so the WAND scan's ``term
+       isin`` min/max row-group skip works on the written files; it also
+       satisfies the partitioned writer's required ordering, so Spark
+       inserts no second sort.  When the target already has manifests,
+       or ``fail_after_bucket`` is set, the same pass runs once per
+       missing bucket instead — the resume path after a mid-write
+       failure.  ``fail_after_bucket=n`` raises after the run's
+       (n+1)-th bucket (resume tests only)."""
+    from pyspark.sql import Observation
+
+    t0 = time.time()
+    spark = logical.postings.sparkSession
+    if segment is None:
+        blocks_dir, ts_dir = f"{out_path}/blocks", f"{out_path}/term_stats"
+        stats_file, meta_dir = f"{out_path}/corpus_stats.json", out_path
+    else:
+        sid = segment["segment"]
+        blocks_dir = f"{out_path}/blocks/segment={sid}"
+        ts_dir = f"{out_path}/seg_term_stats/segment={sid}"
+        stats_file = f"{out_path}/seg_stats/segment_{sid}.json"
+        meta_dir = f"{out_path}/segments/{sid}"
+    manifest_dir = f"{meta_dir}/manifests"
+    os.makedirs(manifest_dir, exist_ok=True)
+    existing = {
+        int(f.split("_")[1].split(".")[0])
+        for f in os.listdir(manifest_dir)
+        if f.startswith("bucket_")
     }
+
+    postings = logical.postings.cache()
+    ts = logical.term_stats.cache()
+    try:
+        # cores-many part files (not a fixed tiny coalesce: a 4-task
+        # write is identical serial weight at every cluster size)
+        t = time.time()
+        obs_ts = Observation("ts_stats")
+        (
+            ts.observe(
+                obs_ts,
+                F.count(F.lit(1)).alias("n_terms"),
+                F.sum("df").alias("sdf"),
+                F.sum("ttf").alias("sttf"),
+            )
+            .coalesce(max(4, spark.sparkContext.defaultParallelism))
+            .write.mode("overwrite").options(**BLOCKS_WRITE_OPTIONS)
+            .parquet(ts_dir)
+        )
+        svals = obs_ts.get
+        _lineage(meta_dir, "ts_write", wall_s=round(time.time() - t, 2))
+        t = time.time()
+        dc_obs = logical.pop_doc_count_observation()
+        if dc_obs is not None:
+            doc_count = int(dc_obs.get["dc"] or 0)
+        else:
+            doc_count = int(postings.agg(
+                F.countDistinct("doc_id").alias("dc")
+            ).collect()[0]["dc"] or 0)
+        _lineage(meta_dir, "stats_aggs", wall_s=round(time.time() - t, 2))
+        sum_ttf = int(svals["sttf"] or 0)
+        stats = {
+            "doc_count": doc_count,
+            "sum_ttf": sum_ttf,
+            "sum_doc_freq": int(svals["sdf"] or 0),
+            "avgdl": (sum_ttf / doc_count) if doc_count else 0.0,
+            "has_positions": "positions" in postings.columns,
+            "has_offsets": "start_offsets" in postings.columns,
+            "n_buckets": n_buckets,
+            **(segment or {}),
+        }
+        _lineage(meta_dir, "postings", rows=stats["sum_doc_freq"],
+                 wall_s=round(time.time() - t0, 2))
+        hot_terms = [
+            r[0]
+            for r in ts.where(F.col("df") > salt_threshold)
+            .select("term").collect()
+        ]
+        _lineage(meta_dir, "stats", terms=int(svals["n_terms"] or 0),
+                 hot_terms=len(hot_terms))
+        # the cached stats table IS the vocabulary — without it
+        # encode_blocks re-derives the dict via a full distinct-shuffle
+        # over the postings exchange
+        term_dict = ts.select("term")
+        enc_kw = dict(avgdl=stats["avgdl"] or 1.0, doc_count=doc_count,
+                      block_size=block_size, n_salts=n_salts,
+                      salt_threshold=salt_threshold, hot_terms=hot_terms,
+                      term_dict=term_dict,
+                      tid_seed=_choose_tid_seed(term_dict))
+
+        def write_buckets(buckets: list[int]) -> None:
+            tb0 = time.time()
+            whole = len(buckets) == n_buckets
+            part = postings if whole else postings.where(
+                term_bucket(F.col("term"), n_buckets) == buckets[0])
+            blocks = encode_blocks(part, **enc_kw).withColumn(
+                "tb", term_bucket(F.col("term"), n_buckets))
+            pc = _payload_cols(blocks.columns)
+            enriched = (
+                blocks.withColumn("_h", _block_hash_dec(pc))
+                .withColumn("_pb", _payload_bytes(pc))
+            )
+            obs = Observation("bucket_manifests")
+            aggs = []
+            for b in buckets:
+                cond = F.col("tb") == b
+                aggs += [
+                    F.count(F.when(cond, 1)).alias(f"blocks_{b}"),
+                    F.sum(F.when(cond, F.col("n"))).alias(f"postings_{b}"),
+                    F.sum(F.when(cond, F.col("_pb"))).alias(f"bytes_{b}"),
+                    F.sum(F.when(cond, F.col("_h"))).alias(f"hsum_{b}"),
+                ]
+            out = (
+                enriched.observe(obs, *aggs)
+                .drop("_h", "_pb")
+                .sortWithinPartitions("tb", "term", "salt", "block_id")
+            )
+            if whole:
+                out.write.mode("overwrite").options(**BLOCKS_WRITE_OPTIONS) \
+                    .partitionBy("tb").parquet(blocks_dir)
+            else:
+                out.drop("tb").write.mode("overwrite") \
+                    .options(**BLOCKS_WRITE_OPTIONS) \
+                    .parquet(f"{blocks_dir}/tb={buckets[0]}")
+            wall = time.time() - tb0
+            vals = obs.get
+            for b in buckets:
+                nblocks = int(vals[f"blocks_{b}"] or 0)
+                manifest = {
+                    "bucket": b,
+                    "blocks": nblocks,
+                    "postings": int(vals[f"postings_{b}"] or 0),
+                    "payload_bytes": int(vals[f"bytes_{b}"] or 0),
+                    "checksum": str(vals[f"hsum_{b}"] or 0),
+                    "wall_s": round(wall if nblocks else 0.0, 2),
+                }
+                with open(f"{manifest_dir}/bucket_{b}.json", "w") as f:
+                    json.dump(manifest, f)
+                _lineage(meta_dir, "blocks_bucket", **manifest)
+
+        if existing or fail_after_bucket is not None:
+            todo = [b for b in range(n_buckets) if b not in existing]
+            for i, b in enumerate(todo):
+                write_buckets([b])
+                if fail_after_bucket is not None and i >= fail_after_bucket:
+                    raise RuntimeError(f"injected failure after bucket {b}")
+        else:
+            write_buckets(list(range(n_buckets)))
+
+        os.makedirs(os.path.dirname(stats_file), exist_ok=True)
+        with open(stats_file, "w") as f:
+            json.dump(stats, f)
+        _lineage(meta_dir, "build_done", wall_s=round(time.time() - t0, 2),
+                 postings=stats["sum_doc_freq"])
+    finally:
+        postings.unpersist()
+        ts.unpersist()
 
 
 def build_physical_index(
@@ -673,217 +873,20 @@ def build_physical_index(
     with_positions: bool = False,
     with_offsets: bool = False,
 ) -> PhysicalIndex:
-    """Checkpointed build: logical index -> block encode + per-bucket
-    manifests.
+    """Bulk build: ``build_logical_index`` of ``docs``, written by
+    ``write_index`` (which resumes a partially-written ``out_path``).
 
-    Two physical strategies, identical output:
-
-    - **one-shot** (default): a single partitionBy(tb) write of every
-      bucket, then one grouped pass computing all bucket manifests —
-      minimal job count, the throughput path.
-    - **per-bucket** (a partially-built ``out_path``, or
-      ``fail_after_bucket``): encode+write+manifest loop per bucket;
-      buckets with an existing manifest are skipped, which is the resume
-      path after a mid-build failure.
-
-    ``fail_after_bucket`` injects a crash after N completed buckets
-    (resume tests only)."""
-    spark = docs.sparkSession
-    os.makedirs(out_path, exist_ok=True)
-    t0 = time.time()
-    manifest_dir = f"{out_path}/manifests"
-    os.makedirs(manifest_dir, exist_ok=True)
-    existing = {
-        int(f.split("_")[1].split(".")[0])
-        for f in os.listdir(manifest_dir)
-        if f.startswith("bucket_")
-    }
-
-    idx = logical or build_logical_index(
-        docs, text_col, analyzer, with_positions=with_positions,
-        with_offsets=with_offsets,
-    )
-    idx.postings = idx.postings.cache()
-    postings = idx.postings.withColumn(
-        "tb", term_bucket(F.col("term"), n_buckets)
-    )
-
-    # global stats (small) — written once, idempotent.  The term_stats
-    # write is the job that materializes both caches; corpus_stats then
-    # costs one per-doc agg over the cached postings + a ms-scale agg
-    # on the cached ts (no second tokenize pass).
-    ts = idx.term_stats = idx.term_stats.cache()
-    # cores-many part files (not a fixed tiny coalesce: a 4-task write
-    # is identical serial weight at every cluster size — pure Amdahl
-    # drag); file creates are cheap under RawLocalFileSystem and the
-    # stats table stays O(cores) files.  The write job doubles as the
-    # stats job: an Observation on the stats rows yields n_terms,
-    # sum_doc_freq and sum_ttf (Σ_terms ttf ≡ Σ_postings tf) for free —
-    # each avoided driver-side job boundary is serial time Amdahl
-    # charges at high core counts.
-    from pyspark.sql import Observation
-
-    t_ts = time.time()
-    obs_ts = Observation("ts_stats")
-    (
-        ts.observe(
-            obs_ts,
-            F.count(F.lit(1)).alias("n_terms"),
-            F.sum("df").alias("sdf"),
-            F.sum("ttf").alias("sttf"),
-        )
-        .coalesce(max(4, spark.sparkContext.defaultParallelism))
-        .write.mode("overwrite").options(**BLOCKS_WRITE_OPTIONS)
-        .parquet(f"{out_path}/term_stats")
-    )
-    svals = obs_ts.get
-    _lineage(out_path, "ts_write", wall_s=round(time.time() - t_ts, 2))
-    # doc_count (distinct docs with ≥1 posting — not derivable from
-    # term_stats): for explode-plan logical indexes built HERE, it
-    # arrives FREE via the tokenize-stage Observation that fired inside
-    # the cache-materializing ts write above (zero extra jobs — the old
-    # full-cache countDistinct pass was ~1.2 s of per-build serial
-    # weight at 16 cores).  Caller-provided logicals (whose cache may
-    # already be materialized — the observation would never fire) and
-    # indexes from the in-task plans keep the explicit aggregation.
-    t_st = time.time()
-    dc_obs = idx.pop_doc_count_observation() if logical is None else None
-    if dc_obs is not None:
-        doc_count = int(dc_obs.get["dc"] or 0)
-    else:
-        doc_count = int(
-            idx.postings.agg(
-                F.countDistinct("doc_id").alias("dc")
-            ).collect()[0]["dc"] or 0
-        )
-    _lineage(out_path, "stats_aggs", wall_s=round(time.time() - t_st, 2))
-    sum_ttf = int(svals["sttf"] or 0)
-    stats = idx._corpus_stats = {
-        "doc_count": doc_count,
-        "sum_ttf": sum_ttf,
-        "sum_doc_freq": int(svals["sdf"] or 0),
-        "avgdl": (sum_ttf / doc_count) if doc_count else 0.0,
-    }
-    n_postings = stats["sum_doc_freq"]
-    _lineage(out_path, "postings", rows=n_postings,
-             wall_s=round(time.time() - t0, 2))
-    stats = dict(stats,
-                 has_positions="positions" in idx.postings.columns,
-                 has_offsets="start_offsets" in idx.postings.columns)
-    with open(f"{out_path}/corpus_stats.json", "w") as f:
-        json.dump(stats, f)
-    hot_terms = [
-        r[0]
-        for r in ts.where(F.col("df") > salt_threshold)
-        .select("term").collect()
-    ]
-    _lineage(out_path, "stats", terms=int(svals["n_terms"] or 0),
-             hot_terms=len(hot_terms))
-
-    avgdl = stats["avgdl"] or 1.0
-    doc_count = stats["doc_count"]
-    term_dict = ts.select("term")
-    # seed chosen ONCE here: the per-bucket path calls encode_blocks
-    # per bucket and would otherwise re-run the vocabulary injectivity
-    # job n_buckets times
-    tid_seed = _choose_tid_seed(term_dict)
-    enc_kw = dict(avgdl=avgdl, doc_count=doc_count, block_size=block_size,
-                  n_salts=n_salts, salt_threshold=salt_threshold,
-                  hot_terms=hot_terms,
-                  # the cached stats table IS the vocabulary — without
-                  # it encode_blocks re-derives the dict via a full
-                  # distinct-shuffle over the postings exchange
-                  term_dict=term_dict, tid_seed=tid_seed)
-
-    if not existing and fail_after_bucket is None:
-
-        tb0 = time.time()
-        blocks = encode_blocks(postings.drop("tb"), **enc_kw).withColumn(
-            "tb", term_bucket(F.col("term"), n_buckets)
-        )
-        # ONE pass shuffle→encode→sort→write.  Round-1/2 ran this as
-        # three jobs (encode+cache, repartition+write, manifest scan of
-        # the cache) — two extra full traversals of the blocks data plus
-        # a second shuffle, all effectively Amdahl-serial weight on a
-        # memory-bandwidth-capped box (encode phase scaled 1.3× for 4×
-        # cores while the postings phase hit 2.7×).  Now the bucket
-        # manifests are computed *in the write pass* via ``observe``
-        # (per-bucket conditional aggregates on a CollectMetrics node —
-        # no second scan, no cache), and the write consumes the encode
-        # partitions directly (2×cores partitions ≥ the old
-        # max(buckets, cores) write parallelism).  The local
-        # sortWithinPartitions(tb, …) both groups each task's rows by
-        # bucket dir (≤ n_buckets files per task, same O(tasks·buckets)
-        # worst case as the old (tb, term) hash) and restores
-        # term-ordered row groups so the WAND scan's `term isin`
-        # min/max row-group skip works on the written files; it also
-        # satisfies the dynamic-partition writer's required ordering,
-        # so Spark inserts no second sort.
-        pc = _payload_cols(blocks.columns)
-        enriched = (
-            blocks.withColumn("_h", _block_hash_dec(pc))
-            .withColumn("_pb", _payload_bytes(pc))
-        )
-        obs = Observation("bucket_manifests")
-        aggs = []
-        for b in range(n_buckets):
-            cond = F.col("tb") == b
-            aggs += [
-                F.count(F.when(cond, 1)).alias(f"blocks_{b}"),
-                F.sum(F.when(cond, F.col("n"))).alias(f"postings_{b}"),
-                F.sum(F.when(cond, F.col("_pb"))).alias(f"bytes_{b}"),
-                F.sum(F.when(cond, F.col("_h"))).alias(f"hsum_{b}"),
-            ]
-        (
-            enriched.observe(obs, *aggs)
-            .drop("_h", "_pb")
-            .sortWithinPartitions("tb", "term", "salt", "block_id")
-            .write.mode("overwrite").options(**BLOCKS_WRITE_OPTIONS)
-            .partitionBy("tb").parquet(f"{out_path}/blocks")
-        )
-        wall = time.time() - tb0
-        vals = obs.get
-        for b in range(n_buckets):
-            nblocks = int(vals[f"blocks_{b}"] or 0)
-            manifest = {
-                "bucket": b,
-                "blocks": nblocks,
-                "postings": int(vals[f"postings_{b}"] or 0),
-                "payload_bytes": int(vals[f"bytes_{b}"] or 0),
-                "checksum": str(vals[f"hsum_{b}"] or 0),
-                "wall_s": round(wall if nblocks else 0.0, 2),
-            }
-            with open(f"{manifest_dir}/bucket_{b}.json", "w") as f:
-                json.dump(manifest, f)
-            _lineage(out_path, "blocks_bucket", **manifest)
-    else:
-        done = 0
-        for b in range(n_buckets):
-            if b in existing:
-                continue
-            tb0 = time.time()
-            bucket_blocks = encode_blocks(
-                postings.where(F.col("tb") == b).drop("tb"), **enc_kw
-            )
-            target = f"{out_path}/blocks/tb={b}"
-            bucket_blocks.coalesce(2).write.mode("overwrite").options(
-                **BLOCKS_WRITE_OPTIONS
-            ).parquet(target)
-            row = _manifest_agg(spark.read.parquet(target), None).collect()[0]
-            manifest = _manifest_dict(row, b, time.time() - tb0)
-            with open(f"{manifest_dir}/bucket_{b}.json", "w") as f:
-                json.dump(manifest, f)
-            _lineage(out_path, "blocks_bucket", **manifest)
-            done += 1
-            if fail_after_bucket is not None and done > fail_after_bucket:
-                raise RuntimeError(f"injected failure after bucket {b}")
-
-    _lineage(out_path, "build_done", wall_s=round(time.time() - t0, 2),
-             postings=n_postings)
-    idx.postings.unpersist()
-    ts.unpersist()
-    term_dict.unpersist()  # encode_blocks cached the handle we passed
-    return PhysicalIndex(out_path, spark)
+    ``logical``: a prebuilt logical index to write instead; only the
+    benchmark's traced run still passes one (``perfbench/workloads.py``
+    times the two halves apart) — other code calls ``write_index``."""
+    if logical is None:
+        logical = build_logical_index(
+            docs, text_col, analyzer, with_positions=with_positions,
+            with_offsets=with_offsets)
+    write_index(logical, out_path, block_size=block_size, n_salts=n_salts,
+                salt_threshold=salt_threshold, n_buckets=n_buckets,
+                fail_after_bucket=fail_after_bucket)
+    return PhysicalIndex(out_path, docs.sparkSession)
 
 
 def index_stats(index: PhysicalIndex) -> dict:
@@ -919,7 +922,9 @@ def index_stats(index: PhysicalIndex) -> dict:
         "n_blocks": int(agg["n_blocks"]),
         "n_buckets": int(agg["n_buckets"]),
         "bytes_blocks": _du(f"{index.path}/blocks"),
-        "bytes_term_stats": _du(f"{index.path}/term_stats"),
+        "bytes_term_stats": _du(f"{index.path}/seg_term_stats"
+                                if index.segmented
+                                else f"{index.path}/term_stats"),
         "varbyte_payload_bytes": payload,
         "compression_ratio": round(
             (int(agg["n_postings"]) * 16) / max(1, payload), 3

@@ -48,6 +48,21 @@ class LogicalIndex:
     #: materializing the plan.
     _doc_count_obs: object | None = field(default=None, repr=False)
 
+    @classmethod
+    def from_postings(cls, postings: DataFrame,
+                      doc_lengths: DataFrame | None = None) -> "LogicalIndex":
+        """The logical index over ``postings``: term stats aggregated
+        from them, doc lengths too unless given (docs without tokens
+        have no postings)."""
+        if doc_lengths is None:
+            doc_lengths = postings.groupBy("doc_id").agg(
+                F.first("dl").alias("dl"))
+        term_stats = postings.groupBy("term").agg(
+            F.count(F.lit(1)).alias("df"),
+            F.sum("tf").alias("ttf"),
+        )
+        return cls(postings, term_stats, doc_lengths)
+
     def pop_doc_count_observation(self):
         obs, self._doc_count_obs = self._doc_count_obs, None
         return obs
@@ -343,12 +358,7 @@ def build_logical_index(
             .agg(F.count(F.lit(1)).alias("tf"), F.first("dl").alias("dl"))
         )
 
-    term_stats = postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"),
-        F.sum("tf").alias("ttf"),
-    )
-
-    out = LogicalIndex(postings, term_stats, doc_lengths)
+    out = LogicalIndex.from_postings(postings, doc_lengths)
     out._doc_count_obs = dc_obs
     return out
 

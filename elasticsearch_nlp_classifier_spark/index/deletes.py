@@ -14,7 +14,9 @@ Lucene's liveDocs bitset).  Same contract here:
   pruning stays exact.
 - Corpus/term stats keep counting deleted docs until a compaction —
   Lucene behavior (IDF drifts slightly until merge); ``compact``
-  rebuilds the index without the tombstoned postings and resets stats.
+  hands the live postings (decoded, tombstoned docs anti-joined away)
+  to ``blocks.write_index``, so the rewritten index and its stats
+  cover the live docs only.
 
 Scale shape: tombstone sets are tiny relative to the corpus (Lucene
 forces merge at 50% deleted; real delete rates are ≪1%/day).  The
@@ -33,7 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .blocks import PhysicalIndex, build_physical_index
+from .blocks import PhysicalIndex, write_index
 from .build import LogicalIndex
 
 
@@ -176,25 +178,12 @@ def compact(index: PhysicalIndex, out_path: str,
     surviving postings, so IDF sees the post-delete corpus.
 
     Decode → filter → re-encode runs fully distributed (``mapInPandas``
-    decode, the standard encode shuffle); nothing but the tombstone set
-    touches the driver."""
+    decode, then ``write_index`` over the live postings); nothing but
+    the tombstone set touches the driver."""
     deleted = deleted_df(index)
     postings = index.logical_postings()
     if deleted is not None:
         postings = postings.join(F.broadcast(deleted), "doc_id", "left_anti")
-    term_stats = postings.groupBy("term").agg(
-        F.count(F.lit(1)).alias("df"), F.sum("tf").alias("ttf")
-    )
-    logical = LogicalIndex(
-        postings=postings,
-        term_stats=term_stats,
-        doc_lengths=postings.groupBy("doc_id").agg(F.first("dl").alias("dl")),
-    )
-    return build_physical_index(
-        # docs/text_col unused when a prebuilt logical index is passed
-        index.spark.createDataFrame([], "doc_id bigint, content string"),
-        out_path,
-        block_size=block_size,
-        logical=logical,
-        with_positions="positions" in postings.columns,
-    )
+    write_index(LogicalIndex.from_postings(postings), out_path,
+                block_size=block_size)
+    return PhysicalIndex(out_path, index.spark)

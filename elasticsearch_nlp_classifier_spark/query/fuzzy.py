@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.blocks import N_TERM_BUCKETS, PhysicalIndex
+from ..index.blocks import PhysicalIndex
 from .wand import RESULT_SCHEMA, topk_from_pairs
 
 
@@ -84,7 +84,6 @@ def fuzzy_topk(
     prefix_length: int = 0,
     max_expansions: int = 50,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score): BM25 top-k where every analyzed
@@ -154,5 +153,5 @@ def fuzzy_topk(
 
     deleted, del_df = _tombstones(index, respect_deletes)
     ks = {qid: k for qid, _ in tok_pairs}
-    return topk_from_pairs(index, pairs, ks, n_buckets=n_buckets,
+    return topk_from_pairs(index, pairs, ks,
                            deleted=deleted, deleted_df=del_df)

@@ -29,7 +29,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.blocks import N_TERM_BUCKETS, PhysicalIndex
+from ..index.blocks import PhysicalIndex
 from .wand import RESULT_SCHEMA, topk_from_pairs
 
 
@@ -49,7 +49,6 @@ def prefix_topk(
     k: int = 10,
     max_expansions: int = 50,
     query_id: int = 0,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """BM25 top-k for a prefix query: all indexed terms starting with
@@ -61,7 +60,7 @@ def prefix_topk(
     )
     pairs = [(query_id, r["term"]) for r in rows]
     return topk_from_pairs(
-        index, pairs, {query_id: k}, n_buckets=n_buckets,
+        index, pairs, {query_id: k},
         **_del_kw(index, respect_deletes),
     )
 
@@ -72,7 +71,6 @@ def wildcard_topk(
     k: int = 10,
     max_expansions: int = 50,
     query_id: int = 0,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene wildcard query: ``*`` = any run, ``?`` = one char.  The
@@ -89,7 +87,7 @@ def wildcard_topk(
     )
     pairs = [(query_id, r["term"]) for r in rows]
     return topk_from_pairs(
-        index, pairs, {query_id: k}, n_buckets=n_buckets,
+        index, pairs, {query_id: k},
         **_del_kw(index, respect_deletes),
     )
 
@@ -100,7 +98,6 @@ def regexp_topk(
     k: int = 10,
     max_expansions: int = 50,
     query_id: int = 0,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene/ES ``regexp`` query: the pattern (implicitly anchored at
@@ -119,7 +116,7 @@ def regexp_topk(
     )
     pairs = [(query_id, r["term"]) for r in rows]
     return topk_from_pairs(
-        index, pairs, {query_id: k}, n_buckets=n_buckets,
+        index, pairs, {query_id: k},
         **_del_kw(index, respect_deletes),
     )
 
@@ -131,7 +128,6 @@ def match_bool_prefix_topk(
     max_expansions: int = 50,
     analyzer: str = "code",
     query_id: int = 0,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """ES ``match_bool_prefix``: the analyzed query becomes a bool
@@ -159,7 +155,7 @@ def match_bool_prefix_topk(
     terms = sorted(set(full) | {r["term"] for r in rows})
     pairs = [(query_id, t) for t in terms]
     return topk_from_pairs(
-        index, pairs, {query_id: k}, n_buckets=n_buckets,
+        index, pairs, {query_id: k},
         **_del_kw(index, respect_deletes),
     )
 
@@ -259,7 +255,6 @@ def more_like_this(
     k: int = 10,
     max_query_terms: int = 25,
     query_id: int = 0,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
     include_self: bool = False,
 ) -> DataFrame:
@@ -273,7 +268,7 @@ def more_like_this(
     pairs = [(query_id, t) for t in terms]
     out = topk_from_pairs(
         index, pairs, {query_id: k if include_self else k + 1},
-        n_buckets=n_buckets, **_del_kw(index, respect_deletes),
+        **_del_kw(index, respect_deletes),
     )
     if include_self:
         return out
@@ -299,7 +294,6 @@ def search_as_you_type_topk(
     shingle_analyzer: str = "simple_code_shingle2",
     window: int = 100,
     max_expansions: int = 50,
-    n_buckets: int = N_TERM_BUCKETS,
 ) -> DataFrame:
     """ES ``search_as_you_type`` field queried with the default
     ``multi_match`` ``bool_prefix`` over the base field and its
@@ -322,11 +316,11 @@ def search_as_you_type_topk(
 
     base = match_bool_prefix_topk(
         index, query, k=window, max_expansions=max_expansions,
-        analyzer=analyzer, n_buckets=n_buckets,
+        analyzer=analyzer,
     ).select("doc_id", F.col("score").alias("s_base"))
     sh = match_bool_prefix_topk(
         shingle2_index, query, k=window, max_expansions=max_expansions,
-        analyzer=shingle_analyzer, n_buckets=n_buckets,
+        analyzer=shingle_analyzer,
     ).select("doc_id", F.col("score").alias("s_2gram"))
     combined = (
         base.join(sh, "doc_id", "full_outer")

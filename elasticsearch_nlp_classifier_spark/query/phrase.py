@@ -33,15 +33,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.blocks import N_TERM_BUCKETS, PhysicalIndex, term_bucket
+from ..index.blocks import PhysicalIndex, term_bucket
 from ..index.codec import segmented_delta_decode, vb_decode
 
 
-def positional_postings(
-    index: PhysicalIndex,
-    terms: list[str],
-    n_buckets: int = N_TERM_BUCKETS,
-) -> DataFrame:
+def positional_postings(index: PhysicalIndex, terms: list[str]) -> DataFrame:
     """(term, doc_id, positions array<bigint>) for the given terms only —
     partition-pruned, row-group-skipped block scan + vectorized decode."""
     if not index.has_positions:
@@ -57,7 +53,8 @@ def positional_postings(
         )
     tb_pdf = spark.createDataFrame(
         pd.DataFrame({"term": terms})
-    ).select(term_bucket(F.col("term"), n_buckets).alias("tb")).toPandas()
+    ).select(term_bucket(F.col("term"), index.n_buckets).alias("tb")) \
+        .toPandas()
     buckets = sorted(set(int(b) for b in tb_pdf["tb"]))
     blocks = (
         index.blocks.where(F.col("tb").isin(buckets))
@@ -94,7 +91,6 @@ def match_phrase(
     index: PhysicalIndex,
     phrase: str,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """(doc_id, n_matches) — docs whose analyzed token stream contains
@@ -111,7 +107,7 @@ def match_phrase(
     if not slots:
         return spark.createDataFrame([], "doc_id bigint, n_matches bigint")
 
-    pp = positional_postings(index, slots, n_buckets)
+    pp = positional_postings(index, slots)
     if len(slots) > 1:
         pp = pp.cache()  # ≤ len(slots) filtered reads of the same decode
 
@@ -165,7 +161,6 @@ def match_phrase_prefix(
     phrase: str,
     analyzer: str = "code",
     max_expansions: int = 50,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """ES ``match_phrase_prefix``: the analyzed phrase must appear as
@@ -201,8 +196,8 @@ def match_phrase_prefix(
     if not exp:
         return empty
 
-    pp = positional_postings(index, sorted(set(exact) | set(exp)),
-                             n_buckets).cache()
+    pp = positional_postings(index,
+                             sorted(set(exact) | set(exp))).cache()
     # last slot: per-doc union of every expansion's positions
     last = (
         pp.where(F.col("term").isin(exp))
@@ -259,7 +254,6 @@ def span_near(
     phrase: str,
     slop: int = 0,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanNearQuery`` (ordered): docs where the analyzed
@@ -284,7 +278,7 @@ def span_near(
     if not slots:
         return spark.createDataFrame([], "doc_id bigint, n_matches bigint")
 
-    pp = positional_postings(index, slots, n_buckets)
+    pp = positional_postings(index, slots)
     if len(slots) > 1:
         pp = pp.cache()
 

@@ -44,7 +44,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.blocks import N_TERM_BUCKETS, PhysicalIndex
+from ..index.blocks import PhysicalIndex
 from ..index.deletes import live_docs
 from .phrase import positional_postings
 
@@ -66,7 +66,6 @@ def span_or(
     index: PhysicalIndex,
     terms: list[str],
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanOrQuery`` over term clauses: ``(doc_id, n_matches)``
@@ -79,7 +78,7 @@ def span_or(
     spark = index.spark
     if not slots:
         return spark.createDataFrame([], _EMPTY)
-    pp = positional_postings(index, slots, n_buckets)
+    pp = positional_postings(index, slots)
     res = (
         pp.groupBy("doc_id")
         .agg(F.sum(F.size("positions")).cast("bigint").alias("n_matches"))
@@ -92,7 +91,6 @@ def span_first(
     term: str,
     end: int,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanFirstQuery``: occurrences of ``term`` whose span
@@ -105,7 +103,7 @@ def span_first(
         raise ValueError(
             f"span_first takes a single analyzed term, got {slots!r}"
         )
-    pp = positional_postings(index, slots, n_buckets)
+    pp = positional_postings(index, slots)
     hits = F.size(
         F.filter(F.col("positions"), lambda p: p + F.lit(1) <= F.lit(end))
     ).cast("bigint")
@@ -123,7 +121,6 @@ def span_not(
     pre: int = 0,
     post: int = 0,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanNotQuery``: occurrences of ``include`` with no
@@ -143,7 +140,7 @@ def span_not(
         raise ValueError("span_not takes single analyzed terms")
     if inc[0] == exc[0]:
         return spark.createDataFrame([], _EMPTY)
-    pp = positional_postings(index, sorted({inc[0], exc[0]}), n_buckets)
+    pp = positional_postings(index, sorted({inc[0], exc[0]}))
     pp = pp.cache()
     inc_df = pp.where(F.col("term") == inc[0]).select(
         "doc_id", F.col("positions").alias("pos_inc")
@@ -173,7 +170,6 @@ def intervals_match(
     max_gaps: int = 0,
     ordered: bool = False,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """ES ``intervals`` query, ``match`` rule: all analyzed terms of
@@ -192,7 +188,7 @@ def intervals_match(
     if ordered:
         return span_near(
             index, query, slop=max_gaps, analyzer=analyzer,
-            n_buckets=n_buckets, respect_deletes=respect_deletes,
+            respect_deletes=respect_deletes,
         )
     slots = _analyzed_terms(query, analyzer)
     spark = index.spark
@@ -200,7 +196,7 @@ def intervals_match(
         return spark.createDataFrame([], _EMPTY)
     if len(set(slots)) != len(slots):
         raise ValueError("intervals_match requires distinct analyzed terms")
-    pp = positional_postings(index, slots, n_buckets)
+    pp = positional_postings(index, slots)
     if len(slots) > 1:
         pp = pp.cache()
 
@@ -279,11 +275,11 @@ def _big_span_pairs(t1: str, t2: str, slop: int):
     ), q_of
 
 
-def _two_term_frame(index, t1, t2, little, n_buckets):
+def _two_term_frame(index, t1, t2, little):
     """(doc_id, pos_a, pos_b, pos_l) for docs holding all three terms —
     each side a single-term pruned positional decode, joins df-bounded."""
     terms = sorted({t1, t2, little})
-    pp = positional_postings(index, terms, n_buckets).cache()
+    pp = positional_postings(index, terms).cache()
     out = (
         pp.where(F.col("term") == t1)
         .select("doc_id", F.col("positions").alias("pos_a"))
@@ -306,7 +302,6 @@ def span_containing(
     big: tuple[str, str, int],
     little: str,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanContainingQuery``: spans of ``big`` that contain a
@@ -327,7 +322,7 @@ def span_containing(
     spark = index.spark
     if not all([a1, a2, al]) or a1 == a2:
         return spark.createDataFrame([], _EMPTY)
-    frame = _two_term_frame(index, a1, a2, al, n_buckets)
+    frame = _two_term_frame(index, a1, a2, al)
     anchors, q_of = _big_span_pairs(a1, a2, slop)
 
     def contains_little(p):
@@ -351,7 +346,6 @@ def span_within(
     little: str,
     big: tuple[str, str, int],
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanWithinQuery`` — the dual of ``span_containing``:
@@ -366,7 +360,7 @@ def span_within(
     spark = index.spark
     if not all([a1, a2, al]) or a1 == a2:
         return spark.createDataFrame([], _EMPTY)
-    frame = _two_term_frame(index, a1, a2, al, n_buckets)
+    frame = _two_term_frame(index, a1, a2, al)
     anchors, q_of = _big_span_pairs(a1, a2, slop)
 
     def inside_some_big(r):
@@ -389,7 +383,6 @@ def span_multi(
     index: PhysicalIndex,
     pattern: str,
     max_expansions: int = 50,
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """Lucene ``SpanMultiTermQueryWrapper`` (ES ``span_multi``): a
@@ -417,7 +410,7 @@ def span_multi(
     slots = [r["term"] for r in rows]
     if not slots:
         return spark.createDataFrame([], _EMPTY)
-    pp = positional_postings(index, slots, n_buckets)
+    pp = positional_postings(index, slots)
     res = (
         pp.groupBy("doc_id")
         .agg(F.sum(F.size("positions")).cast("bigint").alias("n_matches"))

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.blocks import N_TERM_BUCKETS, PhysicalIndex
+from ..index.blocks import PhysicalIndex
 from ..index.codec import segmented_delta_decode, vb_decode
 
 RESULT_SCHEMA = "query_id bigint, rank int, doc_id bigint, score double"
@@ -241,7 +241,6 @@ def wand_topk(
     queries: "DataFrame | pd.DataFrame",
     k: int | None = None,
     analyzer: str = "code",
-    n_buckets: int = N_TERM_BUCKETS,
     respect_deletes: bool = True,
 ) -> DataFrame:
     """(query_id, rank, doc_id, score) — exact BM25 top-k via the
@@ -272,7 +271,7 @@ def wand_topk(
         for qid, text in zip(qp["query_id"], qp["query_text"])
         for t in an.tokenize(text)
     })
-    return topk_from_pairs(index, pairs, ks, n_buckets=n_buckets,
+    return topk_from_pairs(index, pairs, ks,
                            deleted=deleted, deleted_df=del_df)
 
 
@@ -348,7 +347,6 @@ def topk_from_pairs(
     index: PhysicalIndex,
     pairs: list[tuple[int, str]],
     ks: dict[int, int],
-    n_buckets: int = N_TERM_BUCKETS,
     deleted: "np.ndarray | None" = None,
     deleted_df: DataFrame | None = None,
 ) -> DataFrame:
@@ -375,7 +373,7 @@ def topk_from_pairs(
     # (isin pushes into the parquet scan; JVM computes the bucket
     # hash).  Cached per index generation: terms seen in an earlier
     # batch skip the job entirely (PhysicalIndex.term_stats_for).
-    ts = index.term_stats_for(terms, n_buckets)
+    ts = index.term_stats_for(terms)
     df_by_term = {t: df for t, (df, _) in ts.items() if df is not None}
     tb_by_term = {t: tb for t, (_, tb) in ts.items() if tb is not None}
 

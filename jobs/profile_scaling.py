@@ -45,7 +45,8 @@ def main():
         assign_doc_ids,
     )
     from elasticsearch_nlp_classifier_spark.index.blocks import (
-        build_physical_index, encode_blocks, _choose_tid_seed, _tid_expr,
+        build_physical_index, encode_blocks, write_index, _choose_tid_seed,
+        _tid_expr,
     )
     from elasticsearch_nlp_classifier_spark.index.build import (
         build_logical_index,
@@ -167,8 +168,7 @@ def main():
     def full_blocks(_):
         p2 = os.path.join(tmp, "idx_full")
         shutil.rmtree(p2, ignore_errors=True)
-        build_physical_index(docs, p2, text_col="content",
-                             analyzer="code", logical=idx)
+        write_index(idx, p2)
         shutil.rmtree(p2, ignore_errors=True)
 
     # full build (re-uses cached logical) for reference

@@ -218,8 +218,7 @@ def test_python_analyzer_build_and_wand(spark, tmp_path):
         n_buckets=4)
     assert idx.corpus_stats["doc_count"] == 120
     q = pd.DataFrame({"query_id": [0], "query_text": ["def import"]})
-    ranked = wand_topk(idx, q, k=5, analyzer="default",
-                       n_buckets=4).toPandas()
+    ranked = wand_topk(idx, q, k=5, analyzer="default").toPandas()
     assert ranked["rank"].tolist() == list(range(1, 6))
     want = bm25_topk(build_logical_index(docs, "content", "default"),
                      spark.createDataFrame(q), k=5,

@@ -170,7 +170,10 @@ def test_delete_docs_accepts_dataframe(spark, index):
 
 def test_compact_purges_tombstones(spark, docs, index, tmp_path):
     delete_docs(index, [4, 0])
+    jsc = spark.sparkContext._jsc
+    cached = len(jsc.getPersistentRDDs())
     idx2 = compact(index, str(tmp_path / "idx2"), block_size=4)
+    assert len(jsc.getPersistentRDDs()) == cached
     remaining = set(
         idx2.logical_postings().select("doc_id").distinct().toPandas().doc_id
     )

@@ -14,7 +14,11 @@ from elasticsearch_nlp_classifier_spark.analyzer import CODE
 from elasticsearch_nlp_classifier_spark.corpus import gen_corpus_pdf, queries_pdf
 from elasticsearch_nlp_classifier_spark.corpus.fixtures import QUERIES
 from elasticsearch_nlp_classifier_spark.index import build_logical_index
-from elasticsearch_nlp_classifier_spark.index.blocks import build_physical_index
+from elasticsearch_nlp_classifier_spark.index.blocks import (
+    PhysicalIndex,
+    build_physical_index,
+    write_index,
+)
 from elasticsearch_nlp_classifier_spark.query import bm25_oracle, bm25_topk
 from elasticsearch_nlp_classifier_spark.query.wand import wand_topk
 
@@ -31,10 +35,8 @@ def logical(spark, corpus_sf_tiny):
 def physical(spark, corpus_sf_tiny, logical, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index") / "phys")
     # low salt threshold so hot terms actually exercise the salted path
-    return build_physical_index(
-        corpus_sf_tiny["docs"], out, logical=logical,
-        block_size=16, n_salts=4, salt_threshold=50,
-    )
+    write_index(logical, out, block_size=16, n_salts=4, salt_threshold=50)
+    return PhysicalIndex(out, spark)
 
 
 def test_full_decode_integrity(physical, logical):
@@ -101,19 +103,16 @@ def test_wand_matches_bruteforce_and_oracle(spark, physical, logical):
 def test_checkpoint_resume_identical(spark, corpus_sf_tiny, logical, tmp_path_factory):
     out_a = str(tmp_path_factory.mktemp("resume") / "a")
     out_b = str(tmp_path_factory.mktemp("resume") / "b")
-    kw = dict(logical=logical, block_size=16, n_salts=4,
-              salt_threshold=50, n_buckets=4)
+    kw = dict(block_size=16, n_salts=4, salt_threshold=50, n_buckets=4)
 
-    build_physical_index(corpus_sf_tiny["docs"], out_a, **kw)
+    write_index(logical, out_a, **kw)
 
     # crash after 2 buckets, then resume
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_physical_index(
-            corpus_sf_tiny["docs"], out_b, fail_after_bucket=1, **kw
-        )
+        write_index(logical, out_b, fail_after_bucket=1, **kw)
     done_before = sorted(os.listdir(f"{out_b}/manifests"))
     assert len(done_before) == 2
-    build_physical_index(corpus_sf_tiny["docs"], out_b, **kw)
+    write_index(logical, out_b, **kw)
 
     sha = {}
     for out in (out_a, out_b):

@@ -1,8 +1,12 @@
 """Incremental (Structured Streaming) index: two micro-batches ==
 one batch build, exactly-once segment writes, compaction parity."""
 
+import json
+import os
 import shutil
 
+import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,19 +22,48 @@ from elasticsearch_nlp_classifier_spark.streaming import (
     compact_segments,
     incremental_index_stream,
 )
+from elasticsearch_nlp_classifier_spark.streaming.incremental import (
+    CORPUS_SCHEMA,
+    _write_segment,
+)
 
-QUERY = __import__("pandas").DataFrame(
+QUERY = pd.DataFrame(
     {"query_id": [1, 2], "query_text": ["import def self", "the error test"]}
 )
+
+#: a doc the analyzer keeps no token of, last of batch 1 in key order:
+#: it takes a doc id but writes no posting
+TOKENLESS = {"repo": "org4/repo0", "path": "zz_empty.txt",
+             "commit": "0" * 40, "lang": "go", "content": ""}
+
+
+def _corpus():
+    """120 generated docs plus TOKENLESS, in key order."""
+    pdf = pd.concat([gen_corpus_pdf(120), pd.DataFrame([TOKENLESS])])
+    return pdf.sort_values(["repo", "path", "commit"]).reset_index(drop=True)
+
+
+def _codecs(path):
+    """Compression codecs named in the footers of the parquet files
+    under ``path``."""
+    out = set()
+    for root, _, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                md = pq.ParquetFile(os.path.join(root, f)).metadata
+                out |= {md.row_group(i).column(j).compression
+                        for i in range(md.num_row_groups)
+                        for j in range(md.num_columns)}
+    return out
 
 
 @pytest.fixture(scope="module")
 def corpus_batches(spark, tmp_path_factory):
     """Two batches whose concatenation order equals global key order:
     batch 1 repos sort before batch 2 repos."""
-    pdf = gen_corpus_pdf(120)
-    pdf = pdf.sort_values(["repo", "path", "commit"]).reset_index(drop=True)
-    b1, b2 = pdf.iloc[:70], pdf.iloc[70:]
+    pdf = _corpus()
+    b1, b2 = pdf.iloc[:71], pdf.iloc[71:]
+    assert b1.iloc[-1]["content"] == ""
     src = tmp_path_factory.mktemp("stream_src")
     spark.createDataFrame(b1).coalesce(1).write.parquet(
         str(src / "batch1.parquet")
@@ -63,8 +96,7 @@ def streamed(corpus_batches, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def batch_index(spark, tmp_path_factory):
-    pdf = gen_corpus_pdf(120)
-    docs = assign_doc_ids(spark.createDataFrame(pdf))
+    docs = assign_doc_ids(spark.createDataFrame(_corpus()))
     out = str(tmp_path_factory.mktemp("batch_idx") / "idx")
     return build_physical_index(
         docs, out, text_col="content", analyzer="code",
@@ -75,6 +107,7 @@ def batch_index(spark, tmp_path_factory):
 def test_two_segments_written(streamed):
     segs = streamed.blocks.select("segment").distinct().collect()
     assert {r["segment"] for r in segs} == {0, 1}
+    assert _codecs(f"{streamed.path}/blocks") == {"ZSTD"}
 
 
 def test_stats_match_batch_build(streamed, batch_index):
@@ -105,8 +138,12 @@ def test_streaming_query_matches_batch(streamed, batch_index):
 
 def test_compaction_parity(streamed, batch_index, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("compact") / "idx")
+    jsc = streamed.spark.sparkContext._jsc
+    cached = len(jsc.getPersistentRDDs())
     compact = compact_segments(streamed, out, block_size=16,
                                salt_threshold=50)
+    assert len(jsc.getPersistentRDDs()) == cached
+    assert _codecs(f"{out}/blocks") == {"ZSTD"}
     assert "segment" not in compact.blocks.columns
     got = wand_topk(compact, QUERY, k=10).collect()
     want = wand_topk(batch_index, QUERY, k=10).collect()
@@ -136,23 +173,27 @@ def test_compaction_keeps_tombstones(streamed, tmp_path_factory):
         assert abs(g["score"] - w["score"]) < 1e-9
 
 
-def test_replay_is_idempotent(streamed):
-    """Re-delivering a segment overwrites only that segment partition."""
-    spark = streamed.spark
-    before = streamed.blocks.count()
-    seg0 = streamed.blocks.where(F.col("segment") == 0)
-    n0 = seg0.count()
-    # simulate a replay of batch 0's write
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    (
-        seg0.withColumn("segment", F.lit(0))
-        .write.mode("overwrite")
-        .partitionBy("segment", "tb")
-        .parquet(f"{streamed.path}/blocks")
-    )
-    after = streamed.blocks.count()
-    assert after == before
-    assert streamed.blocks.where(F.col("segment") == 0).count() == n0
+def test_replay_is_idempotent(corpus_batches, streamed):
+    """A replayed micro-batch rewrites its own segment and nothing else.
+    Batch 0 goes through the segment write again after losing its
+    manifests, as a crash inside its blocks write would leave it: the
+    segment gets the same blocks and doc ids, segment 1 is untouched."""
+    spark, src, _ = corpus_batches
+
+    def state():
+        with open(f"{streamed.path}/seg_stats/segment_0.json") as f:
+            seg0 = json.load(f)
+        blocks = sorted(map(tuple, streamed.blocks.select(
+            "segment", "tb", "term", "salt", "block_id", "n", "first_doc",
+            "last_doc").collect()))
+        return seg0, blocks
+
+    before = state()
+    shutil.rmtree(f"{streamed.path}/segments/0/manifests")
+    batch0 = spark.read.schema(CORPUS_SCHEMA).parquet(f"{src}/batch1.parquet")
+    _write_segment(batch0, 0, streamed.path, "content", "code",
+                   block_size=16, n_salts=16, salt_threshold=50)
+    assert state() == before
 
 
 # --- streaming exact dedup (stateful dropDuplicates family) ----------
