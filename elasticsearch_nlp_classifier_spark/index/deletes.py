@@ -178,8 +178,8 @@ def compact(index: PhysicalIndex, out_path: str,
     surviving postings, so IDF sees the post-delete corpus.
 
     Decode → filter → re-encode runs fully distributed (``mapInPandas``
-    decode, then ``write_index`` over the live postings); nothing but
-    the tombstone set touches the driver."""
+    decode, then ``write_index``); nothing but the tombstone set
+    touches the driver."""
     deleted = deleted_df(index)
     postings = index.logical_postings()
     if deleted is not None:
