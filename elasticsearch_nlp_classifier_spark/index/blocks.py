@@ -109,7 +109,9 @@ def _choose_tid_seed(terms: DataFrame, max_attempts: int = 3) -> int:
     ``.distinct()``) — that makes the left side of the injectivity
     check a plain ``count(*)`` instead of a second vocabulary-sized
     ``countDistinct`` shuffle (the check runs inside every build, so
-    its constant cost is Amdahl-serial weight at high core counts)."""
+    its constant cost is Amdahl-serial weight at high core counts).
+    ``write_index`` checks seed 0 itself and calls this only on a
+    collision."""
     for seed in range(max_attempts):
         r = terms.agg(
             F.count(F.lit(1)).alias("nt"),
@@ -466,6 +468,28 @@ def term_bucket(col, n_buckets: int = N_TERM_BUCKETS):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
+def term_buckets(spark: SparkSession, terms, n_buckets: int) -> dict:
+    """{term: tb} computed in the driver, equal to ``term_bucket``:
+    Spark's own XXH64 (seed 42, the ``xxhash64`` default) over the
+    term's UTF-8 bytes, called through the JVM gateway, then pmod
+    ``n_buckets`` (Python's ``%`` of a positive modulus is pmod).  No
+    Spark job."""
+    jvm = spark.sparkContext._jvm
+    xxh64 = jvm.org.apache.spark.sql.catalyst.expressions.XXH64
+    utf8 = jvm.org.apache.spark.unsafe.types.UTF8String
+    return {
+        t: int(xxh64.hashUTF8String(
+            utf8.fromBytes(bytearray(t.encode("utf-8"))), 42)) % n_buckets
+        for t in terms
+    }
+
+
+#: the blocks columns BM25 scoring reads (a positional index also
+#: carries ``pos_vb``, which scoring never needs)
+SCORE_COLUMNS = ["term", "block_id", "n", "first_doc", "last_doc",
+                 "max_tfhat", "docs_vb", "tfs_vb", "dls_vb"]
+
+
 @dataclass
 class PhysicalIndex:
     """Query surface over an index directory.  The index is segmented
@@ -495,13 +519,23 @@ class PhysicalIndex:
                                  F.sum("ttf").alias("ttf"))
 
     @property
+    def committed_segments(self) -> list[int]:
+        """Ids of the segments that have a stats file — the segments
+        ``corpus_stats`` sums (a segment's stats file is written last)."""
+        return sorted(
+            int(fn[len("segment_"):-len(".json")])
+            for fn in os.listdir(f"{self.path}/seg_stats")
+            if fn.startswith("segment_") and fn.endswith(".json")
+        )
+
+    @property
     def corpus_stats(self) -> dict:
         if not self.segmented:
             with open(f"{self.path}/corpus_stats.json") as f:
                 return json.load(f)
         segs = []
-        for fn in sorted(os.listdir(f"{self.path}/seg_stats")):
-            with open(f"{self.path}/seg_stats/{fn}") as f:
+        for s in self.committed_segments:
+            with open(f"{self.path}/seg_stats/segment_{s}.json") as f:
                 segs.append(json.load(f))
         out = {k: v for k, v in (segs[0] if segs else {}).items()
                if k in ("has_positions", "has_offsets", "n_buckets")}
@@ -533,27 +567,68 @@ class PhysicalIndex:
         semantics), so repeated query terms never re-probe: a query
         batch whose terms were all seen before costs ZERO stats jobs —
         the working set of query terms is tiny next to the vocabulary,
-        which is why this is a cache and not a preload."""
+        which is why this is a cache and not a preload.
+
+        A probe runs no Spark job: ``term_stats/`` (or each committed
+        segment's ``seg_term_stats``, summed) is read with pyarrow, the
+        ``term`` filter skipping row groups by their min/max, and ``tb``
+        comes from ``term_buckets``."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
         cache = self.__dict__.setdefault("_term_stats_cache", {})
         missing = sorted(t for t in set(terms) if t not in cache)
         if missing:
-            pdf = (
-                self.term_stats.where(F.col("term").isin(missing))
-                .select("term", "df",
-                        term_bucket(F.col("term"), self.n_buckets)
-                        .alias("tb"))
-                .toPandas()
-            )
-            found = dict(zip(pdf["term"],
-                             zip(pdf["df"].astype(int),
-                                 pdf["tb"].astype(int))))
+            files = self.parquet_files("term_stats")
+            found = {}
+            if files:
+                agg = (
+                    ds.dataset(files, format="parquet")
+                    .to_table(columns=["term", "df"],
+                              filter=pc.field("term").isin(missing))
+                    .group_by("term").aggregate([("df", "sum")])
+                )
+                found = dict(zip(agg.column("term").to_pylist(),
+                                 agg.column("df_sum").to_pylist()))
+            tbs = term_buckets(self.spark, found, self.n_buckets)
             for t in missing:
-                cache[t] = found.get(t, (None, None))
+                cache[t] = ((int(found[t]), tbs[t]) if t in found
+                            else (None, None))
         out = {t: cache[t] for t in set(terms)}
         if len(cache) > 1_000_000:  # bound driver memory
             cache.clear()
             cache.update(out)  # current batch stays resolvable
         return out
+
+    def parquet_files(self, table: str, sub: str = "") -> list[str]:
+        """Data files of ``table`` (``blocks`` or ``term_stats``) under
+        its subdirectory ``sub`` (e.g. ``tb=3``): of each committed
+        segment when the index is segmented (``seg_term_stats`` for the
+        term stats)."""
+        if self.segmented:
+            table = "seg_term_stats" if table == "term_stats" else table
+            dirs = [f"{self.path}/{table}/segment={s}/{sub}"
+                    for s in self.committed_segments]
+        else:
+            dirs = [f"{self.path}/{table}/{sub}"]
+        return [os.path.join(d, f) for d in dirs if os.path.isdir(d)
+                for f in sorted(os.listdir(d)) if f.endswith(".parquet")]
+
+    def read_blocks(self, terms: list[str], buckets: list[int]):
+        """The scoring columns of the blocks of ``terms`` (whose term
+        buckets are ``buckets``) as a pyarrow Table, read in the driver:
+        only the files under those buckets' ``tb=`` directories are
+        opened, and the ``term`` filter skips row groups by their
+        min/max."""
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        files = [f for b in buckets
+                 for f in self.parquet_files("blocks", f"tb={b}")]
+        if not files:
+            return None
+        return ds.dataset(files, format="parquet").to_table(
+            columns=SCORE_COLUMNS, filter=pc.field("term").isin(terms))
 
     def logical_postings(self, blocks_where=None) -> DataFrame:
         """Decode blocks back to (doc_id, term, tf, dl[, positions]) —
@@ -696,7 +771,8 @@ def write_index(
        tokenize-stage observation of ``logical`` when it has one (it
        fires inside this write, which materializes the postings cache),
        else from one ``countDistinct`` job;
-    2. hot terms and the tid seed from the cached term stats;
+    2. hot terms and the tid seed from ONE aggregation over the cached
+       term stats;
     3. the blocks: ONE shuffle→encode→sort→write pass over every bucket,
        whose bucket manifests come from an ``observe`` (per-bucket
        conditional aggregates on a CollectMetrics node — no second scan,
@@ -773,22 +849,27 @@ def write_index(
         }
         _lineage(meta_dir, "postings", rows=stats["sum_doc_freq"],
                  wall_s=round(time.time() - t0, 2))
-        hot_terms = [
-            r[0]
-            for r in ts.where(F.col("df") > salt_threshold)
-            .select("term").collect()
-        ]
+        # ONE aggregation over the cached stats: the hot terms and
+        # _choose_tid_seed's seed-0 injectivity check; seeds are re-drawn
+        # only on a collision
+        r = ts.agg(
+            F.count(F.lit(1)).alias("nt"),
+            F.countDistinct(_tid_expr("term", 0)).alias("nh"),
+            F.collect_list(F.when(F.col("df") > salt_threshold,
+                                  F.col("term"))).alias("hot"),
+        ).collect()[0]
+        hot_terms = sorted(r["hot"])
         _lineage(meta_dir, "stats", terms=int(svals["n_terms"] or 0),
                  hot_terms=len(hot_terms))
         # the cached stats table IS the vocabulary — without it
         # encode_blocks re-derives the dict via a full distinct-shuffle
         # over the postings exchange
         term_dict = ts.select("term")
+        tid_seed = 0 if r["nt"] == r["nh"] else _choose_tid_seed(term_dict)
         enc_kw = dict(avgdl=stats["avgdl"] or 1.0, doc_count=doc_count,
                       block_size=block_size, n_salts=n_salts,
                       salt_threshold=salt_threshold, hot_terms=hot_terms,
-                      term_dict=term_dict,
-                      tid_seed=_choose_tid_seed(term_dict))
+                      term_dict=term_dict, tid_seed=tid_seed)
 
         def write_buckets(buckets: list[int]) -> None:
             tb0 = time.time()

@@ -68,15 +68,10 @@ def deleted_count_upper_bound(index: PhysicalIndex) -> int:
     permanently demoted off the fast driver-array tombstone path."""
     import pyarrow.parquet as pq
 
-    d = _deletes_dir(index)
-    try:
-        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-    except OSError:
-        return 0
     total = 0
-    for f in files:
+    for f in _delete_files(index):
         try:
-            total += pq.ParquetFile(f"{d}/{f}").metadata.num_rows
+            total += pq.ParquetFile(f).metadata.num_rows
         except OSError:
             continue  # file racing with cleanup — it no longer counts
     return total
@@ -123,8 +118,9 @@ def deleted_array(
 ) -> np.ndarray:
     """Sorted unique tombstoned doc ids (driver-side numpy array).
 
-    Deliberately a collect: the tombstone set is side-table small (see
-    module docstring); it rides to scoring tasks in the closure.
+    Read in the driver (``tombstone_ids``): the tombstone set is
+    side-table small (see module docstring); it rides to scoring tasks
+    in the closure.
     GUARDED: when the (cheap, no-job) upper bound from the parquet
     footer row counts (``deleted_count_upper_bound``) exceeds
     ``max_driver_rows``, raises :class:`TombstoneOverflowError` instead
@@ -140,11 +136,29 @@ def deleted_array(
             "driver-closure cap — use deleted_df() / the anti-join "
             "query path, or compact()"
         )
-    df = deleted_df(index)
-    if df is None:
+    return tombstone_ids(_delete_files(index))
+
+
+def _delete_files(index: PhysicalIndex) -> list[str]:
+    d = _deletes_dir(index)
+    if not os.path.isdir(d):
+        return []
+    return sorted(f"{d}/{f}" for f in os.listdir(d) if f.endswith(".parquet"))
+
+
+def tombstone_ids(files) -> np.ndarray:
+    """Sorted unique doc ids of the tombstone parquet ``files``, read in
+    the driver with pyarrow — no Spark job.  The one reader of both
+    ``deleted_array`` and the PIT's frozen file list."""
+    import pyarrow.parquet as pq
+
+    if not files:
         return np.empty(0, dtype=np.int64)
-    pdf = df.toPandas()
-    return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
+    return np.unique(np.concatenate([
+        pq.read_table(f, columns=["doc_id"]).column("doc_id")
+        .to_numpy().astype(np.int64)
+        for f in files
+    ]))
 
 
 def mask_deleted(docs: np.ndarray, deleted: np.ndarray) -> np.ndarray:

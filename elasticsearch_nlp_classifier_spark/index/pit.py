@@ -26,7 +26,6 @@ segments alive until released.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 from dataclasses import dataclass
@@ -51,13 +50,11 @@ class PointInTime:
 def open_pit(index: PhysicalIndex) -> PointInTime:
     """``POST /_pit``: freeze the current tombstone file set.  O(1)
     metadata listing — nothing is read or copied."""
-    d = f"{index.path}/deletes"
-    files = tuple(sorted(
-        f"{d}/{f}" for f in os.listdir(d) if f.endswith(".parquet")
-    )) if os.path.isdir(d) else ()
+    from .deletes import _delete_files
+
     return PointInTime(
         index=index,
-        delete_files=files,
+        delete_files=tuple(_delete_files(index)),
         pit_id=uuid.uuid4().hex,
         opened_at=time.time(),
     )
@@ -72,7 +69,9 @@ def pit_deleted_array(
     count (metadata-only, no scan) bounds the collect; above the cap
     this raises ``TombstoneOverflowError`` and callers use the
     ``pit_deleted_df`` anti-join path."""
-    from .deletes import TOMBSTONE_DRIVER_CAP, TombstoneOverflowError
+    from .deletes import (
+        TOMBSTONE_DRIVER_CAP, TombstoneOverflowError, tombstone_ids,
+    )
 
     if max_driver_rows is None:
         max_driver_rows = TOMBSTONE_DRIVER_CAP
@@ -88,9 +87,7 @@ def pit_deleted_array(
             "driver-closure cap — use pit_deleted_df() / the anti-join "
             "query path"
         )
-    df = pit.index.spark.read.parquet(*pit.delete_files)
-    pdf = df.select("doc_id").distinct().toPandas()
-    return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
+    return tombstone_ids(pit.delete_files)
 
 
 def pit_deleted_df(pit: PointInTime) -> DataFrame | None:

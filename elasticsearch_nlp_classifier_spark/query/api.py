@@ -270,12 +270,13 @@ def profile_search(
     term-stats probe, candidate-block count, score+rank — with
     wall-clock millis and the per-term df/idf the scorer used.
 
-    Phase semantics mirror the engine's two-job query shape
-    (`query/wand.py:wand_topk`): ``stats_probe_ms`` is ~0 when the
-    term-stats cache is warm for this index generation (warm batches
-    skip the probe job entirely); ``candidate_blocks`` adds one
-    metadata-count job the plain search never runs — profiling has
-    observer cost, like ES's profile API."""
+    Phase semantics mirror the engine's query shape
+    (`query/wand.py:wand_topk`): ``stats_probe_ms`` is the driver-side
+    term-stats read (no Spark job), ~0 when the term-stats cache is warm
+    for this index generation; ``candidate_blocks`` adds one
+    metadata-count Spark job the plain search never runs — a single
+    query is scored in the driver with no Spark job at all, so
+    profiling has observer cost, like ES's profile API."""
     import math
     import time as _time
 

@@ -3,9 +3,10 @@
 Variant of block-max WAND (Ding & Suel 2011 — public algorithm) adapted
 to a batch engine, exact by construction:
 
-1. **Candidate pruning at the scan**: query terms → term buckets →
-   parquet *partition pruning* on ``tb``, plus a broadcast join on
-   ``term`` — only the query terms' blocks are ever read.
+1. **Candidate pruning at the read**: query terms → term buckets →
+   only the ``tb=`` directories of those buckets are read, with a
+   ``term`` filter on the row-group min/max — only the query terms'
+   blocks are ever decoded.
 2. **Champion seeding**: the query term with the largest single-term
    upper bound is decoded exactly; the k-th best single-term score is a
    valid lower bound θ of the final k-th best total (every total ≥ its
@@ -25,20 +26,35 @@ docs are computed from *all* their postings (a surviving block is
 decoded in full), in term-sorted order — the same float64 summation
 order as the brute-force path and the pandas oracle.
 
-Scale shape: the scoring stage is ONE ``repartition(query_id)`` →
-``sortWithinPartitions`` → ``mapInArrow`` pass over the candidate
-blocks, ~2 partitions per core with MANY queries per Python task.  The
-earlier ``groupBy.applyInPandas`` version paid a per-*group* Arrow
-round-trip + pandas materialization (~15 ms × one per query): a
-480-query batch spent 7-22 s in harness overhead against ~1 s of
-actual transfer+scoring, and *anti-scaled* from 8 to 32 cores.  Here
-payload bytes come in as Arrow binary columns and are sliced as numpy
-``uint8`` views — no per-row ``bytes`` objects, no pandas — and
-per-task overhead is paid ~2×cores times per batch, not per query.
+Two executions, one kernel.  Every per-request read — term stats,
+term buckets (Spark's own XXH64 through the JVM gateway), tombstones —
+happens in the driver, so the batch's candidate postings (Σ df over its
+(query, term) pairs) are known before any block is read:
+
+- a small batch (Σ df ≤ ``DRIVER_POSTINGS_MAX`` — a single request
+  unless its terms cover millions of postings) reads its candidate
+  blocks with pyarrow and scores them in the driver, and its result
+  frame is a local relation: ZERO Spark jobs.  A request is then tens of
+  milliseconds, not the ~0.8 s of Spark job overhead it used to be;
+- a big batch runs ONE ``repartition(query_id)`` →
+  ``sortWithinPartitions`` → ``mapInArrow`` pass over the candidate
+  blocks, ~2 partitions per core with MANY queries per Python task, so
+  executor parallelism carries it.  The earlier
+  ``groupBy.applyInPandas`` version paid a per-*group* Arrow round-trip +
+  pandas materialization (~15 ms × one per query): a 480-query batch
+  spent 7-22 s in harness overhead against ~1 s of actual
+  transfer+scoring, and *anti-scaled* from 8 to 32 cores.  Here payload
+  bytes come in as Arrow binary columns and are sliced as numpy
+  ``uint8`` views — no per-row ``bytes`` objects, no pandas — and
+  per-task overhead is paid ~2×cores times per batch, not per query.
+
+Both feed ``_score_partition`` the same rows in the same (query_id,
+term, first_doc) order, so they return identical results.
 """
 
 from __future__ import annotations
 
+import math
 from functools import partial
 
 import numpy as np
@@ -46,7 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..index.blocks import PhysicalIndex
+from ..index.blocks import SCORE_COLUMNS, PhysicalIndex
 from ..index.codec import segmented_delta_decode, vb_decode
 
 RESULT_SCHEMA = "query_id bigint, rank int, doc_id bigint, score double"
@@ -190,7 +206,8 @@ def _score_partition(batches, avgdl: float, doc_count: int = 0,
     first_doc); one numpy scoring pass per query group.  The whole
     partition is concatenated first — a partition holds the candidate
     blocks of ~(queries / 2·cores) queries, bounded by the repartition
-    in ``wand_topk``, so this is MBs, not the corpus."""
+    in ``_spark_topk`` (or of one small batch, ``_driver_topk``), so
+    this is MBs, not the corpus."""
     import pyarrow as pa
 
     pending = [pa.Table.from_batches([rb]) for rb in batches if rb.num_rows]
@@ -248,10 +265,11 @@ def wand_topk(
 
     Query latency shape: the query *batch* is tiny, so its analysis
     runs driver-side with the identical ``Analyzer`` chain the index
-    UDFs wrap (parity-tested), and term stats come from ONE pushed-down
-    ``isin`` probe of the (small) term_stats table.  The only other
-    Spark job is the pruned block scan + per-query scoring — two jobs
-    total per batch, regardless of query count.
+    UDFs wrap (parity-tested), and the term stats and tombstones are
+    read in the driver.  A small batch is then scored in the driver
+    with ZERO Spark jobs; a big one is ONE pruned block scan + per-query
+    scoring job (``topk_from_pairs``).  A ``queries`` Spark DataFrame is
+    collected first.
     """
     from ..analyzer.chain import get_analyzer
 
@@ -277,9 +295,7 @@ def wand_topk(
 
 def _topk_join_path(
     index: PhysicalIndex,
-    qdf: DataFrame,
-    buckets: list[int],
-    q_terms: list[str],
+    q: pd.DataFrame,
     deleted_df: DataFrame,
     avgdl: float,
 ) -> DataFrame:
@@ -293,7 +309,8 @@ def _topk_join_path(
     from pyspark.sql.window import Window
 
     post = index.logical_postings(
-        F.col("tb").isin(buckets) & F.col("term").isin(q_terms)
+        F.col("tb").isin(sorted(set(q["tb"])))
+        & F.col("term").isin(sorted(set(q["term"])))
     ).select("doc_id", "term", "tf", "dl")
     live = post.join(deleted_df.select("doc_id"), "doc_id", "left_anti")
     contrib = (
@@ -303,7 +320,8 @@ def _topk_join_path(
                            / F.lit(float(avgdl))))
     )
     scored = (
-        live.join(F.broadcast(qdf), "term")
+        live.join(F.broadcast(index.spark.createDataFrame(
+            q[["query_id", "term", "idf", "k"]])), "term")
         .withColumn("contrib", contrib)
         .groupBy("query_id", "doc_id", "k")
         .agg(F.sum("contrib").alias("score"))
@@ -343,6 +361,111 @@ def _tombstones(index: PhysicalIndex, respect: bool):
         return None, deleted_df(index)
 
 
+#: candidate postings (Σ df over a batch's (query, term) pairs) up to
+#: which a batch is scored in the driver, with no Spark job; a bigger
+#: batch is spread over the executors by the ``mapInArrow`` scan.  Set
+#: at the crossover of the two paths on a 240k-doc index (F3 batches of
+#: 1-120 queries, Σ df 0.24M-21.9M, timed at local[1]/[2]/[4] on a
+#: 4-core VM): the driver path costs ~0.2 µs per candidate posting on
+#: one core, the Spark path ~2.5 s serial + ~9 core-s per 22M postings,
+#: so at 16 cores the two meet near 11M postings.  At 4 cores the
+#: driver path is still ahead at 21.9M (4.6 vs 4.9 s).
+DRIVER_POSTINGS_MAX = 10_000_000
+
+
+def _query_terms(index: PhysicalIndex, pairs: list[tuple[int, str]],
+                 ks: dict[int, int], doc_count: int) -> pd.DataFrame:
+    """One row per (query_id, term) pair whose term is indexed — the
+    term's idf, df and bucket ``tb`` and the query's k — sorted by
+    (query_id, term).  The term stats come from
+    ``PhysicalIndex.term_stats_for``: cached per index generation and
+    read in the driver."""
+    ts = index.term_stats_for(sorted({t for _, t in pairs}))
+    rows = [
+        (qid, t, math.log(1.0 + (doc_count - df + 0.5) / (df + 0.5)),
+         ks[qid], df, tb)
+        for qid, t in pairs
+        for df, tb in [ts[t]]
+        if df is not None
+    ]
+    return pd.DataFrame(
+        rows, columns=["query_id", "term", "idf", "k", "df", "tb"]
+    ).sort_values(["query_id", "term"], ignore_index=True)
+
+
+def _driver_topk(index: PhysicalIndex, q: pd.DataFrame, stats: dict,
+                 deleted: "np.ndarray | None" = None) -> pd.DataFrame:
+    """Score the batch ``q`` (``_query_terms``) in the driver: its
+    candidate blocks are read with pyarrow (``PhysicalIndex.read_blocks``)
+    and laid out as one partition of the ``mapInArrow`` path — one row
+    per (query, block), sorted by (query_id, term, first_doc) — for the
+    same kernel, ``_score_partition``.  Returns the top-k rows sorted by
+    (query_id, rank)."""
+    import pyarrow as pa
+
+    empty = pd.DataFrame({c: pd.Series(dtype=t) for c, t in (
+        ("query_id", "int64"), ("rank", "int32"), ("doc_id", "int64"),
+        ("score", "float64"))})
+    blocks = index.read_blocks(sorted(set(q["term"])),
+                               sorted(set(q["tb"])))
+    if blocks is None or not blocks.num_rows:
+        return empty
+    blocks = blocks.sort_by([("term", "ascending"),
+                             ("first_doc", "ascending")])
+    names, first, count = np.unique(
+        blocks.column("term").to_numpy(zero_copy_only=False),
+        return_index=True, return_counts=True)
+    span = {t: (int(f), int(c)) for t, f, c in zip(names, first, count)}
+    f0, n = np.array([span[t] for t in q["term"]]).T
+    rows = np.repeat(f0 - np.cumsum(n) + n, n) + np.arange(n.sum())
+    cand = blocks.take(rows)
+    for col, dtype in (("query_id", pa.int64()), ("k", pa.int64()),
+                       ("idf", pa.float64())):
+        cand = cand.append_column(
+            col, pa.array(np.repeat(q[col].to_numpy(), n), type=dtype))
+    out = list(_score_partition(cand.to_batches(),
+                                avgdl=float(stats["avgdl"]) or 1.0,
+                                doc_count=stats["doc_count"],
+                                deleted=deleted))
+    if not out:
+        return empty
+    return (pa.Table.from_batches(out).to_pandas()
+            .sort_values(["query_id", "rank"], ignore_index=True))
+
+
+def _spark_topk(index: PhysicalIndex, q: pd.DataFrame, stats: dict,
+                deleted: "np.ndarray | None" = None) -> DataFrame:
+    """Score the batch ``q`` (``_query_terms``) on the executors: ONE
+    pruned block scan joined to the broadcast query terms, repartitioned
+    by query and scored by ``_score_partition`` in ``mapInArrow``.  Two
+    pruning layers reach the parquet reader: hive partition pruning on
+    ``tb`` (and on ``segment``, to the committed segments), and an
+    ``isin`` on term — blocks are term-sorted within each bucket file, so
+    parquet row-group min/max stats skip nearly all non-candidate
+    groups.  Rows come out unordered."""
+    blocks = index.blocks.where(F.col("tb").isin(sorted(set(q["tb"]))))
+    if index.segmented:
+        blocks = blocks.where(F.col("segment").isin(index.committed_segments))
+    blocks = blocks.where(F.col("term").isin(sorted(set(q["term"])))) \
+        .select(*SCORE_COLUMNS)
+    qdf = index.spark.createDataFrame(q[["query_id", "term", "idf", "k"]])
+    cand = blocks.join(F.broadcast(qdf), "term")
+
+    # scoring partitions: ~2 per core so stragglers (skewed queries)
+    # pack, but NOT per-query — each Python task scores many queries
+    nparts = max(1, min(q["query_id"].nunique(),
+                        2 * index.spark.sparkContext.defaultParallelism))
+    return (
+        cand.repartition(nparts, "query_id")
+        .sortWithinPartitions("query_id", "term", "first_doc")
+        .mapInArrow(
+            partial(_score_partition, avgdl=float(stats["avgdl"]) or 1.0,
+                    doc_count=stats["doc_count"], deleted=deleted),
+            RESULT_SCHEMA,
+        )
+    )
+
+
 def topk_from_pairs(
     index: PhysicalIndex,
     pairs: list[tuple[int, str]],
@@ -354,83 +477,31 @@ def topk_from_pairs(
     shared by :func:`wand_topk` (analyzed text) and
     ``query/fuzzy.py`` (vocabulary-expanded terms).
 
+    A batch whose candidate postings (Σ df over its pairs, known from
+    the term stats before any block is read) are at most
+    ``DRIVER_POSTINGS_MAX`` is scored in the driver (``_driver_topk``)
+    and runs no Spark job; a bigger one runs the ``mapInArrow`` scan
+    (``_spark_topk``).  Both feed the same kernel the same rows in the
+    same order, so their results are identical.
+
     ``deleted``: sorted tombstone array, masked inside the numpy
     scorer (the fast path — bounded by ``TOMBSTONE_DRIVER_CAP``).
     ``deleted_df``: over-cap fallback — the same exact BM25 over the
     identically-pruned block scan, but decoded to postings and
     anti-joined against the tombstone TABLE before scoring, so no
     driver-side materialization of the delete set ever happens."""
-    import math
-
     stats = index.corpus_stats
-    doc_count = stats["doc_count"]
-    avgdl = float(stats["avgdl"]) or 1.0
     if not pairs:
         return index.spark.createDataFrame([], RESULT_SCHEMA)
-    terms = sorted({t for _, t in pairs})
-
-    # job 1: tiny probe — df + term bucket for just the query terms
-    # (isin pushes into the parquet scan; JVM computes the bucket
-    # hash).  Cached per index generation: terms seen in an earlier
-    # batch skip the job entirely (PhysicalIndex.term_stats_for).
-    ts = index.term_stats_for(terms)
-    df_by_term = {t: df for t, (df, _) in ts.items() if df is not None}
-    tb_by_term = {t: tb for t, (_, tb) in ts.items() if tb is not None}
-
-    q_rows = [
-        {
-            "query_id": qid,
-            "term": t,
-            "idf": math.log(
-                1.0 + (doc_count - df_by_term[t] + 0.5)
-                / (df_by_term[t] + 0.5)
-            ),
-            "k": ks[qid],
-        }
-        for qid, t in pairs
-        if t in df_by_term
-    ]
-    if not q_rows:
+    q = _query_terms(index, pairs, ks, stats["doc_count"])
+    if q.empty:
         return index.spark.createDataFrame([], RESULT_SCHEMA)
-    buckets = sorted({int(tb_by_term[r["term"]]) for r in q_rows})
-
-    # job 2: pruned block scan + scoring.  Two pruning layers reach the
-    # parquet reader: hive partition pruning on tb, and an `isin` on
-    # term — blocks are term-sorted within each bucket file, so parquet
-    # row-group min/max stats skip nearly all non-candidate groups.
-    q_terms = sorted({r["term"] for r in q_rows})
-    blocks = (
-        index.blocks.where(F.col("tb").isin(buckets))
-        .where(F.col("term").isin(q_terms))
-        .select("term", "block_id", "n", "first_doc", "last_doc",
-                "max_tfhat", "docs_vb", "tfs_vb", "dls_vb")
-        # explicit projection: a positional index also carries pos_vb,
-        # which BM25 scoring never reads — keep it out of the scan
-    )
-    qdf = index.spark.createDataFrame(
-        pd.DataFrame(q_rows, columns=["query_id", "term", "idf", "k"])
-    )
-
     if deleted_df is not None:
         if deleted is not None:
             raise ValueError("pass deleted OR deleted_df, not both")
-        return _topk_join_path(index, qdf, buckets, q_terms,
-                               deleted_df, avgdl)
-
-    cand = blocks.join(F.broadcast(qdf), "term")
-
-    # scoring partitions: ~2 per core so stragglers (skewed queries)
-    # pack, but NOT per-query — each Python task scores many queries
-    n_queries = len({r["query_id"] for r in q_rows})
-    nparts = max(1, min(n_queries,
-                        2 * index.spark.sparkContext.defaultParallelism))
-    out = (
-        cand.repartition(nparts, "query_id")
-        .sortWithinPartitions("query_id", "term", "first_doc")
-        .mapInArrow(
-            partial(_score_partition, avgdl=avgdl, doc_count=doc_count,
-                    deleted=deleted),
-            RESULT_SCHEMA,
-        )
-    )
-    return out.orderBy("query_id", "rank")
+        return _topk_join_path(index, q, deleted_df,
+                               float(stats["avgdl"]) or 1.0)
+    if q["df"].sum() <= DRIVER_POSTINGS_MAX:
+        return index.spark.createDataFrame(
+            _driver_topk(index, q, stats, deleted), RESULT_SCHEMA)
+    return _spark_topk(index, q, stats, deleted).orderBy("query_id", "rank")

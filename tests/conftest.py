@@ -32,3 +32,23 @@ def corpus_sf_tiny(spark, tmp_path_factory):
     docs = assign_doc_ids(docs).cache()
     docs.count()
     return {"docs": docs, "path": path}
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh job group and
+    returns (number of Spark jobs it started, its result)."""
+    import uuid
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count jobs")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    return run

@@ -247,3 +247,66 @@ def test_checkpoint_resume_offsets_identical(spark, tmp_path_factory):
     import pandas as pd
 
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
+WAND_QUERIES = ["import tokenize stream", "def self return", "error",
+                "class main test value"]
+
+
+def _pairs(texts):
+    return sorted({(i, t) for i, text in enumerate(texts)
+                   for t in CODE.tokenize(text)})
+
+
+def test_single_query_wand_runs_no_spark_job(physical, spark_jobs):
+    """A one-query request is scored in the driver: term stats, term
+    buckets, blocks and tombstones are read without a Spark job, and
+    the result frame collects without one."""
+    import pandas as pd
+
+    ix = PhysicalIndex(physical.path, physical.spark)  # cold stats cache
+    for i, text in enumerate(WAND_QUERIES):
+        jobs, rows = spark_jobs(lambda: wand_topk(ix, pd.DataFrame(
+            {"query_id": [i], "query_text": [text]}), k=5).collect())
+        assert rows and jobs == 0, (text, jobs)
+
+
+def test_driver_and_spark_scorers_agree(physical):
+    """The driver-side scorer and the mapInArrow scorer return identical
+    rows on the same pairs, with and without a tombstone array."""
+    from elasticsearch_nlp_classifier_spark.query.wand import (
+        _driver_topk, _query_terms, _spark_topk,
+    )
+
+    stats = physical.corpus_stats
+    pairs = _pairs(WAND_QUERIES)
+    q = _query_terms(physical, pairs, {i: 7 for i, _ in pairs},
+                     stats["doc_count"])
+    first = _driver_topk(physical, q, stats)
+    for deleted in (None, np.sort(first["doc_id"].unique()[::2])):
+        got = _driver_topk(physical, q, stats, deleted)
+        want = (_spark_topk(physical, q, stats, deleted).toPandas()
+                .sort_values(["query_id", "rank"], ignore_index=True))
+        assert len(got) == len(want) > 0
+        assert got.values.tolist() == want.values.tolist()
+        if deleted is not None:
+            assert not set(got["doc_id"]) & set(deleted)
+
+
+def test_driver_term_bucket_matches_spark(spark, physical):
+    """``term_buckets`` (the driver's XXH64 through the gateway) equals
+    ``term_bucket`` (Spark's ``xxhash64``) over the index vocabulary plus
+    non-ASCII and empty terms."""
+    from elasticsearch_nlp_classifier_spark.index.blocks import (
+        term_bucket, term_buckets,
+    )
+
+    vocab = [r["term"] for r in physical.term_stats.select("term").collect()]
+    terms = vocab + ["", "größe", "日本語", "naïve", "😀 emoji", "a" * 300]
+    want = {
+        r["t"]: r["tb"]
+        for r in spark.createDataFrame([(t,) for t in terms], "t string")
+        .select("t", term_bucket(F.col("t"), physical.n_buckets)
+                .alias("tb")).collect()
+    }
+    assert term_buckets(spark, terms, physical.n_buckets) == want

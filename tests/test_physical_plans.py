@@ -79,17 +79,28 @@ def test_blocks_partition_pruning_on_term_bucket(physical):
     assert "term" in pushed
 
 
+def _mapinarrow_scorer(index, text):
+    """The ``mapInArrow`` WAND scorer's frame for one query: a
+    single-query ``wand_topk`` is scored in the driver and has no Spark
+    plan, so the plan of the executor path is taken directly."""
+    from elasticsearch_nlp_classifier_spark.analyzer.chain import (
+        get_analyzer,
+    )
+    from elasticsearch_nlp_classifier_spark.query.wand import (
+        _query_terms, _spark_topk,
+    )
+
+    stats = index.corpus_stats
+    pairs = [(0, t) for t in sorted(set(get_analyzer("code").tokenize(text)))]
+    q = _query_terms(index, pairs, {0: 5}, stats["doc_count"])
+    return _spark_topk(index, q, stats), q
+
+
 def test_wand_scan_prunes_partitions_and_pushes_terms(physical):
     """The WAND query path's block read must carry BOTH the tb
     partition filter (file pruning) and a term IN (...) pushed filter
     (row-group skipping) — VERDICT J4's contract."""
-    from elasticsearch_nlp_classifier_spark.query.wand import wand_topk
-
-    spark = physical.blocks.sparkSession
-    qpdf = spark.createDataFrame(
-        [(0, "import tokenize stream")], ["query_id", "query_text"]
-    )
-    res = wand_topk(physical, qpdf, k=5)
+    res, _ = _mapinarrow_scorer(physical, "import tokenize stream")
     p = plan(res)
     assert "PartitionFilters" in p
     part = p.split("PartitionFilters:")[1].splitlines()[0]
@@ -103,13 +114,37 @@ def test_wand_scan_prunes_partitions_and_pushes_terms(physical):
 
 def test_small_sides_broadcast(spark, physical):
     """Dimension-sized sides must broadcast, not shuffle the corpus."""
+    res, _ = _mapinarrow_scorer(physical, "import tokenize stream")
+    p = plan(res)
+    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
+
+
+def test_driver_wand_opens_only_query_buckets(physical, monkeypatch):
+    """The driver-side WAND read opens only files under the query
+    terms' ``tb=`` directories."""
+    import os
+
+    import pandas as pd
+    import pyarrow.dataset as ds
+
     from elasticsearch_nlp_classifier_spark.query.wand import wand_topk
 
-    qpdf = spark.createDataFrame(
-        [(0, "import tokenize stream")], ["query_id", "query_text"]
-    )
-    p = plan(wand_topk(physical, qpdf, k=5))
-    assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
+    _, q = _mapinarrow_scorer(physical, "import tokenize stream")
+    opened = []
+    real = ds.dataset
+
+    def recording(source, *a, **kw):
+        opened.extend(source)
+        return real(source, *a, **kw)
+
+    monkeypatch.setattr(ds, "dataset", recording)
+    wand_topk(physical, pd.DataFrame(
+        {"query_id": [0], "query_text": ["import tokenize stream"]}), k=5)
+    blocks = [f for f in opened if f"{os.sep}blocks{os.sep}" in f]
+    assert blocks
+    want = {f"tb={b}" for b in q["tb"]}
+    assert len(want) < physical.n_buckets
+    assert {os.path.basename(os.path.dirname(f)) for f in blocks} <= want
 
 
 def test_scale_path_operators_have_no_row_python(spark):

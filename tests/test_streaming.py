@@ -173,6 +173,47 @@ def test_compaction_keeps_tombstones(streamed, tmp_path_factory):
         assert abs(g["score"] - w["score"]) < 1e-9
 
 
+def test_segmented_wand_runs_no_spark_job_after_delete(
+        streamed, tmp_path_factory, spark_jobs):
+    """On a segmented index with tombstones, a one-query request runs no
+    Spark job, and the driver-side and mapInArrow scorers return
+    identical rows with and without the tombstones (on a copy — the
+    shared fixture stays delete-free)."""
+    from elasticsearch_nlp_classifier_spark.analyzer import CODE
+    from elasticsearch_nlp_classifier_spark.index.deletes import (
+        deleted_array,
+    )
+    from elasticsearch_nlp_classifier_spark.query.wand import (
+        _driver_topk, _query_terms, _spark_topk,
+    )
+
+    base = tmp_path_factory.mktemp("segmented_driver")
+    src = StreamingPhysicalIndex(
+        shutil.copytree(streamed.path, str(base / "src")), streamed.spark)
+    victims = [r["doc_id"] for r in wand_topk(src, QUERY, k=3).collect()]
+    delete_docs(src, victims[::2])
+    for qid, text in zip(QUERY["query_id"], QUERY["query_text"]):
+        one = pd.DataFrame({"query_id": [qid], "query_text": [text]})
+        jobs, rows = spark_jobs(
+            lambda: wand_topk(src, one, k=10).collect())
+        assert rows and jobs == 0, (text, jobs)
+        assert not {r["doc_id"] for r in rows} & set(victims[::2])
+
+    pairs = sorted({(int(qid), t)
+                    for qid, text in zip(QUERY["query_id"],
+                                         QUERY["query_text"])
+                    for t in CODE.tokenize(text)})
+    stats = src.corpus_stats
+    q = _query_terms(src, pairs, {qid: 10 for qid, _ in pairs},
+                     stats["doc_count"])
+    for deleted in (None, deleted_array(src)):
+        got = _driver_topk(src, q, stats, deleted)
+        want = (_spark_topk(src, q, stats, deleted).toPandas()
+                .sort_values(["query_id", "rank"], ignore_index=True))
+        assert len(got) == len(want) > 0
+        assert got.values.tolist() == want.values.tolist()
+
+
 def test_replay_is_idempotent(corpus_batches, streamed):
     """A replayed micro-batch rewrites its own segment and nothing else.
     Batch 0 goes through the segment write again after losing its
