@@ -37,9 +37,9 @@ vocabulary and the weight matrix has a fixed, known size at any
 corpus scale.  Hashes are JVM ``xxhash64`` (no Python in the
 feature path).
 
-Prediction is NB's scale shape exactly (``nb.py:predict_nb``): ONE
-shuffle keyed by doc, per-class scores as columns from a broadcast
-weight join, argmax with ties → label ASC.  For cross-engine oracle
+Prediction has NB's scoring pass (``nb.py:predict_nb``): ONE shuffle
+keyed by doc, per-class scores as columns from a broadcast weight join,
+and the same argmax (``nb.argmax_prediction``, ties → label ASC).  For cross-engine oracle
 comparisons weights are rounded before scoring and scores rounded
 before the argmax (float64 sums accumulate in engine-specific order).
 """
@@ -54,6 +54,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..analyzer.spark_udfs import analyze_fields
+from .nb import argmax_prediction
 
 __all__ = ["LinearModel", "hashed_features", "train_maxent",
            "train_maxent_qn", "train_perceptron", "predict_linear"]
@@ -471,22 +472,9 @@ def predict_linear(
 
     feats = hashed_features(
         docs, text_cols, model.dim, analyzer=analyzer, id_col=id_col)
-    per_doc = _scores_df(feats, wdf, k)
-
-    scores = F.array(*[F.col(f"_s{i}") for i in range(k)])
-    ranked = (
-        F.transform(scores, lambda s: F.round(s, tie_round))
-        if tie_round is not None else scores
-    )
-    best = F.array_position(ranked, F.array_max(ranked))
-    out = per_doc.select(
-        F.col("_id").alias(id_col),
-        F.element_at(
-            F.array(*[F.lit(c) for c in labels]), best.cast("int")
-        ).alias("prediction"),
-        F.element_at(scores, best.cast("int")).alias("score"),
-    )
-    return out if keep_scores else out.drop("score")
+    return argmax_prediction(
+        _scores_df(feats, wdf, k), id_col,
+        [F.col(f"_s{i}") for i in range(k)], labels, tie_round, keep_scores)
 
 
 def predict_sql(

@@ -1,7 +1,7 @@
 """Multinomial Naive Bayes — the reference's classifier layer
-(`v1/classifier/OpenNLPClassifier.java:26-110`, NAIVEBAYES doccat), as
-pure DataFrame aggregations from the same term-frequency aggregates the
-index build uses (SURVEY §2.4 A8/A9).
+(`v1/classifier/OpenNLPClassifier.java:26-110`, NAIVEBAYES doccat): two
+collected DataFrame aggregations of the same token stream the index
+build uses train it, one broadcast pass predicts (SURVEY §2.4 A8/A9).
 
 Engine spec (documented; the pandas oracle implements it identically):
 
@@ -15,19 +15,25 @@ Tokens absent from the training vocabulary V are ignored.  The k-fold
 split is the reference's deterministic ``_id % k`` script query
 (`OpenNLPClassifierES.java:31-33`).
 
-Scale shape: the model is tiny (|V|·|classes| rows) → pivoted to a
-per-term class-weight array and broadcast; scoring is ONE shuffle
-(groupBy doc) producing per-class partial sums as columns, and the
-argmax is array arithmetic — no per-class row expansion, no window.
+Scale shape: the model is |classes|·|V| numbers, so it lives on the
+driver.  Training collects two aggregations of the labeled token stream
+— (label, term) → count and label → doc count — and computes V, the
+class totals, the priors and the likelihoods with numpy; the model
+frames are built from those tables and nothing is cached.  Prediction
+pivots ``ll − default`` into one per-term class-delta array, broadcasts
+it and scores every doc in ONE pass: ``explode_outer`` → left broadcast
+join → ``groupBy(doc)`` with per-class sums as columns; the argmax is
+array arithmetic — no per-class row expansion, no window.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
 
 from ..analyzer.spark_udfs import analyze_fields
 
@@ -43,23 +49,6 @@ class NBModel:
     labels: list[str]
 
 
-def _doc_tokens(
-    docs: DataFrame,
-    text_cols: list[str],
-    analyzer: str,
-    id_col: str,
-) -> DataFrame:
-    """(id, term, cnt) — multi-field tokenize+concat (T8) then tf."""
-    return (
-        docs.select(
-            F.col(id_col).alias("_id"),
-            F.explode(analyze_fields(text_cols, analyzer)).alias("term"),
-        )
-        .groupBy("_id", "term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
 def train_nb(
     docs: DataFrame,
     text_cols: list[str],
@@ -73,58 +62,78 @@ def train_nb(
     labeled = docs.where(
         F.col(label_col).isNotNull() & (F.col(label_col) != "")
     )
-    lab = labeled.select(F.col(id_col).alias("_id"),
-                         F.col(label_col).alias("label"))
-    # Tokenize with the label carried through — Σ_d tf(d,t) grouped by
-    # class is the same count as grouping the raw token stream by
-    # (label, term), without a per-doc agg or an id join (one shuffle,
-    # map-side combined, instead of two shuffles + a join).
-    term_counts = (
+    label = F.col(label_col).alias("label")
+    # Σ_d tf(d,t) grouped by class is the count of the raw token stream
+    # grouped by (label, term): no per-doc aggregate, no id join.
+    counts = (
         labeled.select(
-            F.col(label_col).alias("label"),
-            F.explode(analyze_fields(text_cols, analyzer)).alias("term"),
+            label, F.explode(analyze_fields(text_cols, analyzer)).alias("term")
         )
         .groupBy("label", "term")
         .agg(F.count(F.lit(1)).alias("count"))
-    ).cache()
-
-    vocab = term_counts.select("term").distinct().cache()
-    v = vocab.count()
-
-    class_totals = term_counts.groupBy("label").agg(
-        F.sum("count").alias("total")
+        .toPandas()
     )
-    doc_counts = lab.groupBy("label").agg(F.count(F.lit(1)).alias("n_docs"))
-    n_total = labeled.count()
+    n_docs = (
+        labeled.groupBy(label).agg(F.count(F.lit(1)).alias("n"))
+        .toPandas().set_index("label")["n"].sort_index()
+    )
 
-    priors = (
-        doc_counts.join(class_totals, "label", "left")
-        .na.fill({"total": 0})
-        .select(
-            "label",
-            F.log(F.col("n_docs") / F.lit(float(n_total))).alias("log_prior"),
-            F.log(
-                F.lit(alpha)
-                / (F.col("total") + F.lit(alpha) * F.lit(float(v)))
-            ).alias("default_ll"),
-            "total",
-        )
-    ).cache()
+    labels = n_docs.index.tolist()
+    v = int(counts["term"].nunique())
+    totals = counts.groupby("label")["count"].sum().reindex(labels, fill_value=0)
+    denom = totals + alpha * float(v)
 
-    likelihood = (
-        term_counts.join(priors.select("label", "total"), "label")
-        .select(
-            "label",
-            "term",
-            F.log(
-                (F.col("count") + F.lit(alpha))
-                / (F.col("total") + F.lit(alpha) * F.lit(float(v)))
-            ).alias("ll"),
-        )
-    ).cache()
+    spark = docs.sparkSession
+    label_type = labeled.schema[label_col].dataType.simpleString()
+    priors = pd.DataFrame({
+        "label": labels,
+        "log_prior": np.log(n_docs.to_numpy() / float(n_docs.sum())),
+        "default_ll": np.log(alpha / denom.to_numpy()),
+    })
+    counts["ll"] = np.log(
+        (counts["count"] + alpha) / counts["label"].map(denom).to_numpy()
+    )
+    return NBModel(
+        priors=spark.createDataFrame(
+            priors, f"label {label_type}, log_prior double, default_ll double"),
+        likelihood=spark.createDataFrame(
+            counts[["label", "term", "ll"]],
+            f"label {label_type}, term string, ll double"),
+        vocab=spark.createDataFrame(
+            counts[["term"]].drop_duplicates(), "term string"),
+        vocab_size=v,
+        labels=labels,
+    )
 
-    labels = [r["label"] for r in priors.select("label").orderBy("label").collect()]
-    return NBModel(priors.drop("total"), likelihood, vocab, v, labels)
+
+def argmax_prediction(
+    per_doc: DataFrame,
+    id_col: str,
+    scores: list[Column],
+    labels: list,
+    tie_round: int | None,
+    keep_scores: bool,
+) -> DataFrame:
+    """(id, prediction [, score]) from a (_id, ...) frame and one score
+    column per label: argmax = ``array_position`` of ``array_max``, the
+    first match → the smallest label (the reference's tie-break).
+
+    ``tie_round``: round scores to N decimals before the argmax —
+    cross-engine determinism knob for oracle comparisons (float64 sums
+    accumulate in engine-specific order)."""
+    arr = F.array(*scores)
+    ranked = (
+        F.transform(arr, lambda s: F.round(s, tie_round))
+        if tie_round is not None else arr
+    )
+    best = F.array_position(ranked, F.array_max(ranked)).cast("int")
+    out = per_doc.select(
+        F.col("_id").alias(id_col),
+        F.element_at(F.array(*[F.lit(c) for c in labels]), best)
+        .alias("prediction"),
+        F.element_at(arr, best).alias("score"),
+    )
+    return out if keep_scores else out.drop("score")
 
 
 def predict_nb(
@@ -136,79 +145,42 @@ def predict_nb(
     keep_scores: bool = False,
     tie_round: int | None = None,
 ) -> DataFrame:
-    """(id, prediction [, score]) — argmax_c of the documented score.
-
-    ``tie_round``: round scores to N decimals before the argmax —
-    cross-engine determinism knob for oracle comparisons (float64 sums
-    accumulate in engine-specific order)."""
-    # Scale shape: ONE shuffle (groupBy doc), no window, no per-class
-    # row expansion.  Per-term class weights are pivoted into an array
-    # in label order and broadcast; per-doc scores are an element-wise
-    # array aggregation; argmax = array_position of array_max (first
-    # match → smallest label, the reference's tie-break).
+    """(id, prediction [, score]) — argmax_c of the documented score
+    (``tie_round``: see ``argmax_prediction``)."""
     labels = model.labels
-    k = len(labels)
-    pr = {
-        r["label"]: (float(r["log_prior"]), float(r["default_ll"]))
-        for r in model.priors.collect()
-    }
-
-    deltas = (
-        model.likelihood
-        .join(model.priors.select("label", "default_ll"), "label")
-        .withColumn("delta", F.col("ll") - F.col("default_ll"))
-        .groupBy("term")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("label", "delta"))
-            ).alias("m")
-        )
-        .select(
-            "term",
-            F.array(*[
-                F.coalesce(F.col("m")[F.lit(c)], F.lit(0.0)) for c in labels
-            ]).alias("dvec"),
-        )
+    pri = model.priors.toPandas().set_index("label").reindex(labels)
+    ll = model.likelihood.toPandas()
+    ll["delta"] = ll["ll"] - ll["label"].map(pri["default_ll"])
+    dvec = (
+        ll.pivot(index="term", columns="label", values="delta")
+        .reindex(columns=labels).fillna(0.0)
     )
-
-    toks = _doc_tokens(docs, text_cols, analyzer, id_col)
+    deltas = docs.sparkSession.createDataFrame(
+        pd.DataFrame({"term": dvec.index, "dvec": dvec.to_numpy().tolist()}),
+        "term string, dvec array<double>",
+    )
+    # explode_outer + left join keep tokenless docs and out-of-vocab
+    # tokens as rows with a null dvec; count/sum skip the nulls.
     per_doc = (
-        toks.join(F.broadcast(deltas), "term")  # vocab filter included
+        docs.select(
+            F.col(id_col).alias("_id"),
+            F.explode_outer(analyze_fields(text_cols, analyzer)).alias("term"),
+        )
+        .join(F.broadcast(deltas), "term", "left")
         .groupBy("_id")
         .agg(
-            F.sum("cnt").alias("known_cnt"),
-            *[
-                F.sum(F.col("cnt") * F.col("dvec")[i]).alias(f"_s{i}")
-                for i in range(k)
-            ],
+            F.count("dvec").alias("known_cnt"),
+            *[F.sum(F.col("dvec")[i]).alias(f"_s{i}")
+              for i in range(len(labels))],
         )
     )
-
-    all_ids = docs.select(F.col(id_col).alias("_id"))
-    base = all_ids.join(per_doc, "_id", "left").na.fill(
-        {"known_cnt": 0, **{f"_s{i}": 0.0 for i in range(k)}}
-    )
-    scores = F.array(*[
-        F.lit(pr[c][0])
-        + F.col("known_cnt") * F.lit(pr[c][1])
-        + F.col(f"_s{i}")
-        for i, c in enumerate(labels)
-    ])
-    rank_scores = (
-        F.transform(scores, lambda s: F.round(s, tie_round))
-        if tie_round is not None else scores
-    )
-    base = base.withColumn("_scores", scores).withColumn(
-        "_best", F.array_position(rank_scores, F.array_max(rank_scores))
-    )
-    out = base.select(
-        F.col("_id").alias(id_col),
-        F.element_at(
-            F.array(*[F.lit(c) for c in labels]), F.col("_best").cast("int")
-        ).alias("prediction"),
-        F.element_at("_scores", F.col("_best").cast("int")).alias("score"),
-    )
-    return out if keep_scores else out.drop("score")
+    scores = [
+        F.lit(float(p)) + F.col("known_cnt") * F.lit(float(d))
+        + F.coalesce(F.col(f"_s{i}"), F.lit(0.0))
+        for i, (p, d) in enumerate(zip(pri["log_prior"], pri["default_ll"]))
+    ]
+    return argmax_prediction(per_doc, id_col, scores, labels, tie_round,
+                             keep_scores)
 
 
 def accuracy(
@@ -238,12 +210,15 @@ def kfold_validation(
         F.col(label_col).isNotNull() & (F.col(label_col) != "")
     ).cache()
     accs = []
-    for fold in range(k):
-        train = labeled.where(F.pmod(F.col(id_col), F.lit(k)) != fold)
-        test = labeled.where(F.pmod(F.col(id_col), F.lit(k)) == fold)
-        model = train_nb(train, text_cols, label_col, analyzer, id_col)
-        preds = predict_nb(model, test, text_cols, analyzer, id_col)
-        accs.append(accuracy(test, preds, label_col, id_col))
+    try:
+        for fold in range(k):
+            train = labeled.where(F.pmod(F.col(id_col), F.lit(k)) != fold)
+            test = labeled.where(F.pmod(F.col(id_col), F.lit(k)) == fold)
+            model = train_nb(train, text_cols, label_col, analyzer, id_col)
+            preds = predict_nb(model, test, text_cols, analyzer, id_col)
+            accs.append(accuracy(test, preds, label_col, id_col))
+    finally:
+        labeled.unpersist()  # its own plan: a caller's cache stays
     return {"fold_accuracies": accs, "mean_accuracy": sum(accs) / k}
 
 
@@ -276,7 +251,8 @@ def multi_enrich(
     """J3: one model per target over a single cached scan
     (`OpenNLPMultiEnricher.java:93-163`), predictions combined into one
     per-doc update row; Spark DAG reuse replaces the reference's
-    MultiplexIterators."""
+    MultiplexIterators.  The cached scan stays cached: the returned
+    update set is lazy and reads it."""
     docs = docs.cache()
     out = None
     for target in target_cols:

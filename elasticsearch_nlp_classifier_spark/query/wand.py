@@ -64,6 +64,7 @@ from pyspark.sql import functions as F
 
 from ..index.blocks import SCORE_COLUMNS, PhysicalIndex
 from ..index.codec import segmented_delta_decode, vb_decode
+from .bm25 import bm25_contrib
 
 RESULT_SCHEMA = "query_id bigint, rank int, doc_id bigint, score double"
 
@@ -313,16 +314,10 @@ def _topk_join_path(
         & F.col("term").isin(sorted(set(q["term"])))
     ).select("doc_id", "term", "tf", "dl")
     live = post.join(deleted_df.select("doc_id"), "doc_id", "left_anti")
-    contrib = (
-        F.col("idf") * F.col("tf")
-        / (F.col("tf")
-           + F.lit(1.2) * (F.lit(0.25) + F.lit(0.75) * F.col("dl")
-                           / F.lit(float(avgdl))))
-    )
     scored = (
         live.join(F.broadcast(index.spark.createDataFrame(
             q[["query_id", "term", "idf", "k"]])), "term")
-        .withColumn("contrib", contrib)
+        .withColumn("contrib", bm25_contrib(F.col("idf"), avgdl))
         .groupBy("query_id", "doc_id", "k")
         .agg(F.sum("contrib").alias("score"))
     )

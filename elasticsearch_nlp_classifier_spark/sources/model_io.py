@@ -5,7 +5,8 @@ The reference serializes an opaque OpenNLP ``DoccatModel`` binary; our
 model is *relational* — class priors and per-(class, term) smoothed
 log-likelihoods — so the natural sink is two parquet tables plus a tiny
 JSON sidecar (vocab size, label order).  A saved model is loadable on
-any cluster size; the likelihood table broadcasts at predict time.
+any cluster size; ``predict_nb`` collects the priors and likelihood
+tables and broadcasts them as one per-term class-delta array.
 """
 
 from __future__ import annotations

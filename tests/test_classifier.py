@@ -32,12 +32,19 @@ def tweets(spark, tweets_pdf):
 TEXT_COLS = ["text", "keyword"]
 
 
-def test_nb_parity_with_oracle(spark, tweets, tweets_pdf):
+def _persisted(spark):
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_nb_parity_with_oracle(spark, spark_jobs, tweets, tweets_pdf):
     rows = tweets_pdf.to_dict("records")
     model_o = train_oracle(rows, TEXT_COLS, "target", DEFAULT)
     want = predict_oracle(model_o, rows, TEXT_COLS, DEFAULT).sort_values("id")
 
-    model = train_nb(tweets, TEXT_COLS, "target")
+    tweets.count()  # the fixture's own cache is not the round's
+    cached = _persisted(spark)
+    jobs, model = spark_jobs(lambda: train_nb(tweets, TEXT_COLS, "target"))
+    assert jobs <= 4  # two collected aggregations
     assert model.vocab_size == len(model_o["vocab"])
     got = (
         predict_nb(model, tweets, TEXT_COLS, keep_scores=True)
@@ -47,6 +54,8 @@ def test_nb_parity_with_oracle(spark, tweets, tweets_pdf):
     np.testing.assert_allclose(
         got.score.to_numpy(), want.score.to_numpy(), atol=1e-9
     )
+    accuracy(tweets, predict_nb(model, tweets, TEXT_COLS), "target")
+    assert _persisted(spark) == cached  # an NB round caches nothing
 
 
 def test_labeled_filter_before_training(tweets):
@@ -57,9 +66,12 @@ def test_labeled_filter_before_training(tweets):
     assert set(model.labels) == {"0", "1"}
 
 
-def test_kfold_deterministic_and_sane(tweets):
+def test_kfold_deterministic_and_sane(spark, tweets):
+    tweets.count()
+    cached = _persisted(spark)
     r1 = kfold_validation(tweets, TEXT_COLS, "target", k=3)
     r2 = kfold_validation(tweets, TEXT_COLS, "target", k=3)
+    assert _persisted(spark) == cached  # the folds' cache is released
     assert r1["fold_accuracies"] == r2["fold_accuracies"]
     # disaster-vs-benign vocabulary is highly separable (15% label noise)
     assert r1["mean_accuracy"] > 0.7
